@@ -20,8 +20,9 @@ import org.apache.spark.sql.SparkSession
   *
   *  1. `spark.sql.adaptive.coalescePartitions.initialPartitionNum` is
   *     sized from the INPUT BYTES actually being processed
-  *     ([[tuneFor]]): one shuffle partition per ~16 MB of compressed
-  *     input, floored at the cluster parallelism, capped at 4096. Big
+  *     ([[tuneFor]]): one shuffle partition per
+  *     [[TargetInputBytesPerPartition]] (4 MB) of compressed input,
+  *     floored at the cluster parallelism, capped at 4096. Big
   *     inputs get enough partitions not to spill; small inputs keep
   *     the core-count default.
   *  2. `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SizeEstimator
 
 import scala.reflect.ClassTag
 
@@ -16,16 +18,19 @@ import scala.reflect.ClassTag
   * shuffles or spill files: every method lowers directly to a Dataset
   * operator, so Catalyst fuses consecutive maps (`CollapseProject` /
   * whole-stage codegen replaces `dampr/dampr.py:959-967` closure
-  * fusion), `HashAggregateExec` provides the map-side combiner that
-  * `a_group_by` hand-builds (`dampr/dampr.py:661-691`), and sort-based
-  * shuffle replaces the gzip-pickle spill machinery
-  * (`dampr/stagerunner.py:54-129`).
+  * fusion), and sort-based shuffle replaces the gzip-pickle spill
+  * machinery (`dampr/stagerunner.py:54-129`). The one piece it does
+  * build is the associative fold's map-side combiner
+  * ([[GroupedPipe.fold]]): `reduceGroups` alone plans an
+  * `ObjectHashAggregate` that decodes every row into objects and falls
+  * back to sort-based aggregation past 128 keys per partition, so the
+  * fold combines in the mapper first, as `a_group_by` does
+  * (`dampr/dampr.py:661-691`).
   *
   * Scale note: all grouped operations hash-shuffle on the key exactly
-  * once; `reduce`-style folds use `reduceGroups` (partial aggregation
-  * on the map side) rather than `mapGroups` wherever associativity is
-  * declared, so a 100 TB input only moves its reduced form across the
-  * network.
+  * once; wherever associativity is declared the fold combines on the
+  * map side rather than using `mapGroups`, so a 100 TB input only
+  * moves its reduced form across the network.
   */
 final case class Pipe[T](ds: Dataset[T]) {
   def spark: SparkSession = ds.sparkSession
@@ -107,14 +112,12 @@ final case class Pipe[T](ds: Dataset[T]) {
     * single-pass iterator per key, like the reference's
     * `grouped_read` (`dampr/dataset.py:429-433`).
     */
-  def groupBy[K: Encoder](key: T => K): GroupedPipe[K, T] =
-    GroupedPipe(ds.groupByKey(key))
+  def groupBy[K: Encoder](key: T => K): GroupedPipe[K, T] = GroupedPipe(ds, key)
 
   /** Associative grouping — `a_group_by` (`dampr/dampr.py:386-404`).
-    * Same Spark lowering as [[groupBy]]: the map-side partial reduce
-    * the reference builds by hand (`PartialReduceCombiner`,
-    * `dampr/base.py:393-402`) is what `reduceGroups` /
-    * `HashAggregateExec` already do.
+    * Same grouping as [[groupBy]]; the associativity it declares is
+    * what [[GroupedPipe.fold]] relies on to combine in the mapper, the
+    * reference's `PartialReduceCombiner` (`dampr/base.py:393-402`).
     */
   def aGroupBy[K: Encoder](key: T => K): GroupedPipe[K, T] = groupBy(key)
 
@@ -122,11 +125,11 @@ final case class Pipe[T](ds: Dataset[T]) {
     * associative fold of values per key with map-side combine.
     */
   def foldBy[K: Encoder](key: T => K)(binop: (T, T) => T)(implicit e: Encoder[(K, T)]): Pipe[(K, T)] =
-    Pipe(ds.groupByKey(key).reduceGroups(binop))
+    groupBy(key).fold(binop)
 
   /** Per-key count — `count` (`dampr/dampr.py:439-448`). */
   def countBy[K: Encoder](key: T => K)(implicit e: Encoder[(K, Long)]): Pipe[(K, Long)] =
-    Pipe(ds.groupByKey(key).count())
+    groupBy(key).count()
 
   /** Per-key mean — `mean` (`dampr/dampr.py:450-467`): the reference's
     * `(sum, count)` accumulator is `typed.avg`'s buffer.
@@ -333,9 +336,12 @@ object Pipe {
 }
 
 /** Grouped view after `group_by`/`a_group_by` — the reference's
-  * `PReduce`/`ARReduce` (`dampr/dampr.py:654-766`).
+  * `PReduce`/`ARReduce` (`dampr/dampr.py:654-766`). Holds the source
+  * rows and the key function; each operation builds the grouping it
+  * needs.
   */
-final case class GroupedPipe[K, T](kv: KeyValueGroupedDataset[K, T]) {
+final case class GroupedPipe[K, T](ds: Dataset[T], key: T => K)(implicit kEnc: Encoder[K]) {
+  private def kv: KeyValueGroupedDataset[K, T] = ds.groupByKey(key)
 
   /** General reduce over a lazy single-pass per-key iterator —
     * `PReduce.reduce` (`dampr/dampr.py:716-725`). NOT map-side
@@ -351,17 +357,42 @@ final case class GroupedPipe[K, T](kv: KeyValueGroupedDataset[K, T]) {
   def flatReduce[U: Encoder](f: (K, Iterator[T]) => IterableOnce[U]): Pipe[U] =
     Pipe(kv.flatMapGroups(f))
 
-  /** Associative fold with map-side partial aggregation —
-    * `ARReduce.reduce` (`dampr/dampr.py:661-691`).
+  /** Associative fold with map-side combine — `ARReduce.reduce`
+    * (`dampr/dampr.py:661-691`).
+    *
+    * Each map partition first streams through an [[InMapperCombiner]]
+    * (in-mapper combining, Lin & Dyer; the reference's
+    * `PartialReduceCombiner`, `dampr/base.py:393-402`), which emits one
+    * `(key, partial)` row per key and flush. Those rows then meet
+    * `reduceGroups(binop)` on the carried key, whose
+    * `ObjectHashAggregate` keeps Spark's memory-safe partial and final
+    * merge. Without the combiner that aggregate consumes every raw row,
+    * decoding each into objects, and falls back to sort-based
+    * aggregation once a partition holds more than 128 keys
+    * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`).
+    *
+    * Order: within a partition values fold in input order,
+    * `binop(earlier, later)`; across partitions the order is arbitrary.
+    * That is the guarantee `reduceGroups` alone gave, so `binop` must be
+    * associative but need not be commutative.
     */
-  def fold(binop: (T, T) => T)(implicit e: Encoder[(K, T)]): Pipe[(K, T)] =
-    Pipe(kv.reduceGroups(binop))
+  def fold(binop: (T, T) => T)(implicit e: Encoder[(K, T)]): Pipe[(K, T)] = fold(binop, None)
+
+  /** [[fold]] with the combiner's entry bound fixed instead of derived
+    * from the heap, so tests can force both sides of its flush.
+    */
+  private[graft] def fold(binop: (T, T) => T, maxEntries: Option[Int])(
+      implicit e: Encoder[(K, T)]): Pipe[(K, T)] = {
+    val key = this.key // keeps `this` and its Dataset out of the task closure
+    val partials = ds.mapPartitions(rows => new InMapperCombiner(rows, key, binop, maxEntries))(e)
+    Pipe(partials.groupByKey(_._1).mapValues(_._2)(ds.encoder).reduceGroups(binop))
+  }
 
   /** Arbitrary first value per key — `ARReduce.first`
-    * (`dampr/dampr.py:693-699`).
+    * (`dampr/dampr.py:693-699`): the first in input order of some
+    * partition.
     */
-  def first()(implicit e: Encoder[(K, T)]): Pipe[(K, T)] =
-    Pipe(kv.reduceGroups((a, _) => a))
+  def first()(implicit e: Encoder[(K, T)]): Pipe[(K, T)] = fold((a, _) => a)
 
   /** Per-key distinct values preserving set semantics —
     * `PReduce.unique` (`dampr/dampr.py:727-746`).
@@ -370,6 +401,76 @@ final case class GroupedPipe[K, T](kv: KeyValueGroupedDataset[K, T]) {
     Pipe(kv.mapGroups((k, it) => (k, it.map(sub).toSeq.distinct)))
 
   def count()(implicit e: Encoder[(K, Long)]): Pipe[(K, Long)] = Pipe(kv.count())
+}
+
+/** Bounded in-mapper combiner under [[GroupedPipe.fold]]: folds each
+  * row of one partition into its key's partial with
+  * `binop(partial, row)` in input order, and emits every partial as a
+  * `(key, partial)` row and clears once it holds `maxEntries` keys or
+  * the partition ends. Keys compare by `equals`/`hashCode`, null keys
+  * included; keys that differ there but encode alike (arrays) only
+  * combine less, since the final merge groups on the encoded key.
+  *
+  * When `maxEntries` is not given the bound follows the heap:
+  * [[InMapperCombiner.budgetBytes]] divided by the bytes per entry
+  * that `SizeEstimator` measures on the live map, re-measured each time
+  * the number of rows folded doubles so that partials which grow (lists,
+  * concatenations) still flush before they outgrow the budget.
+  */
+private[graft] final class InMapperCombiner[K, T](
+    rows: Iterator[T], key: T => K, binop: (T, T) => T, maxEntries: Option[Int])
+    extends Iterator[(K, T)] {
+  import InMapperCombiner._
+  require(maxEntries.forall(_ >= 1), s"maxEntries must be at least 1, got $maxEntries")
+
+  private val partials = new java.util.HashMap[K, T]()
+  private val budget = if (maxEntries.isEmpty) budgetBytes() else 0L
+  private var limit = maxEntries.getOrElse(Int.MaxValue)
+  private var folded = 0L
+  private var nextSample = SampleRows
+  private var out: java.util.Iterator[java.util.Map.Entry[K, T]] = java.util.Collections.emptyIterator()
+
+  def hasNext: Boolean = out.hasNext || { partials.clear(); fill(); out.hasNext }
+
+  def next(): (K, T) = {
+    if (!hasNext) throw new NoSuchElementException("InMapperCombiner exhausted")
+    val entry = out.next()
+    (entry.getKey, entry.getValue)
+  }
+
+  private def fill(): Unit = {
+    while (partials.size < limit && rows.hasNext) {
+      val t = rows.next()
+      val k = key(t)
+      val prev = partials.get(k)
+      partials.put(k, if (prev == null && !partials.containsKey(k)) t else binop(prev, t))
+      folded += 1
+      if (folded == nextSample && maxEntries.isEmpty) {
+        val perEntry = math.max(1L, SizeEstimator.estimate(partials) / partials.size)
+        limit = math.max(1L, math.min(Int.MaxValue.toLong, budget / perEntry)).toInt
+        nextSample *= 2
+      }
+    }
+    out = partials.entrySet().iterator()
+  }
+}
+
+private[graft] object InMapperCombiner {
+  /** Rows folded before the first size sample. */
+  val SampleRows = 64L
+
+  /** Heap one task's combiner may hold: a tenth of the JVM's max heap
+    * per task slot of this executor. The combiner's map lives outside
+    * Spark's unified memory region (`spark.memory.fraction` 0.6), so
+    * this takes a quarter of the 40% of heap Spark leaves to user
+    * objects, and needs no setting of its own.
+    */
+  def budgetBytes(): Long = {
+    val cores = Option(SparkEnv.get).map(_.conf.getInt("spark.executor.cores", 0)).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val slots = math.max(1, cores / Option(TaskContext.get()).map(_.cpus()).getOrElse(1))
+    Runtime.getRuntime.maxMemory / 10 / slots
+  }
 }
 
 /** Two-input grouped join — the reference's `PJoin`

@@ -1781,10 +1781,11 @@ object Dedup {
     // hs as array<int> (lossless for the 31-bit hash, same sort order):
     // §2.3 — the audit's dominant x100 stage is attaching hs_a/hs_b to
     // ~148M truth-candidate pairs through two exchanges (stage-break in
-    // NOTES_r14), and the int sets halve exactly those bytes. The `h`
-    // column downstream (rare/blocked/sigs) inherits int; the affine
-    // permutations multiply by long literals, so every derived value is
-    // bit-identical.
+    // NOTES_r14), and the int sets halve exactly those bytes. Only the
+    // collect_set payload is cast; `shingleHashes` keeps its long `h`.
+    // The `h` that `sh` explodes back out of `hs` (and so rare/blocked/
+    // sigs) is int, and the affine permutations multiply it by long
+    // literals, so every derived value is bit-identical.
     val classes = graft.GraftCache.registered(
       shingleHashes(texts, "doc_id", "txt").distinct()
         .groupBy(col("doc_id"))

@@ -120,8 +120,9 @@ object CoreQueries {
 
     // the reference's flagship entry point (examples/wc.py:11-17)
     // driven END-TO-END through the typed Pipe surface — flatMap →
-    // foldBy (map-side-combined via reduceGroups) → sortBy — and
-    // graded against q03's oracle, proving the Dataset-combinator
+    // foldBy (an in-mapper combiner per partition, then reduceGroups'
+    // partial/final ObjectHashAggregate on the combined rows) → sortBy
+    // — and graded against q03's oracle, proving the Dataset-combinator
     // surface computes exactly what the SQL surface does. Closure
     // tokenization mirrors Q.tokens: lowercase, split single spaces,
     // drop empties.

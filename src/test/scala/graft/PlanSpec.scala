@@ -396,13 +396,38 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q123 typed foldBy plans partial+final aggregation (map-side combine)") {
-    // The Pipe surface's foldBy lowers to reduceGroups — the claim
-    // that this matches the reference's hand-built combiner
-    // (dampr/base.py:393-402) requires a PARTIAL aggregate below the
-    // key shuffle, so a 100 TB corpus only moves per-partition
-    // (token, count) partials, not raw tokens.
-    val p = plan(q("q123_pipe_wordcount"))
+    // The Pipe surface's foldBy combines in the mapper and then lowers
+    // to reduceGroups — the claim that this matches the reference's
+    // hand-built combiner (dampr/base.py:393-402) requires a PARTIAL
+    // aggregate below the key shuffle, so a 100 TB corpus only moves
+    // per-partition (token, count) partials, not raw tokens.
+    val df = q("q123_pipe_wordcount")
+    val p = plan(df)
     assert(p.contains("partial_reduceaggregator") || p.contains("partial_"), p)
+    // ...and the in-mapper combiner sits below that key exchange with
+    // every aggregate above it, so no aggregate decodes the raw token
+    // rows (ObjectHashAggregate's sort fallback past 128 keys).
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val phys = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val combiners = phys.collect {
+      case m: MapPartitionsExec if m.func(Iterator.empty).isInstanceOf[InMapperCombiner[_, _]] => m
+    }
+    assert(combiners.size == 1, p)
+    val combiner = combiners.head
+    val keyExchanges = phys.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(keyExchanges.exists(_.find(_ eq combiner).isDefined), p)
+    val aggs = phys.collect { case a: BaseAggregateExec => a }
+    assert(aggs.nonEmpty && aggs.forall(_.find(_ eq combiner).isDefined), p)
+    assert(combiner.find(_.isInstanceOf[BaseAggregateExec]).isEmpty, p)
   }
 
   test("q124 pushes the probe-token filter below the postings aggregation") {

@@ -35,6 +35,72 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("law: in-mapper combined foldBy / aGroupBy.fold / first ≡ groupByKey.reduceGroups, both sides of the combiner bound") {
+    // The form fold lowered to before the combiner, inlined. Keys
+    // include null; 16 partitions leave most of them empty.
+    type R = (String, Int)
+    val key = (r: R) => r._1
+    val sum = (a: R, b: R) => (a._1, a._2 + b._2)
+    val firstOf = (a: R, _: R) => a
+    // associative, NOT commutative: values carry "partition:index;" tags
+    val cat = (a: (String, String), b: (String, String)) => (a._1, a._2 + b._2)
+    def bag[A](xs: Seq[A]): Map[A, Int] = xs.groupMapReduce(identity)(_ => 1)(_ + _)
+    val rowsGen = Gen.listOf(Gen.zip(
+      Gen.option(Gen.chooseNum(0, 6)).map(_.map(i => s"k$i").orNull), Gen.chooseNum(-50, 50)))
+    val bounds = Seq(Some(1), Some(2), None)
+    for (xs <- samples(rowsGen); parts <- Seq(1, 3, 16)) {
+      val p = Pipe.memory(spark, xs, parts)
+      val sums = bag(p.ds.groupByKey(key).reduceGroups(sum).collect().toSeq)
+      for (b <- bounds) assert(bag(p.groupBy(key).fold(sum, b).collect().toSeq) === sums, s"bound $b")
+      assert(bag(p.foldBy(key)(sum).collect().toSeq) === sums)
+      assert(bag(p.aGroupBy(key).fold(sum).collect().toSeq) === sums)
+
+      // first: some value of the key; with one partition the first in
+      // input order, as the old form gives
+      val oldFirst = p.ds.groupByKey(key).reduceGroups(firstOf).collect().toSeq
+      val byKey = xs.groupBy(_._1)
+      for (got <- bounds.map(b => p.groupBy(key).fold(firstOf, b).collect().toSeq) :+
+             p.aGroupBy(key).first().collect().toSeq) {
+        assert(got.map(_._1).toSet === byKey.keySet)
+        assert(got.forall { case (k, r) => byKey(k).contains(r) })
+        if (parts == 1) assert(bag(got) === bag(oldFirst))
+      }
+
+      val tagged = p.partitionMap { it =>
+        val part = org.apache.spark.TaskContext.getPartitionId()
+        it.zipWithIndex.map { case ((k, _), i) => (k, s"$part:$i;") }
+      }
+      val oldCat = tagged.ds.groupByKey(_._1).reduceGroups(cat).collect().toSeq
+      def tags(s: String): Seq[(Int, Int)] =
+        s.split(";").toSeq.filter(_.nonEmpty).map(_.split(":") match { case Array(a, b) => (a.toInt, b.toInt) })
+      for (got <- bounds.map(b => tagged.groupBy(_._1).fold(cat, b).collect().toSeq) :+
+             tagged.foldBy(_._1)(cat).collect().toSeq) {
+        assert(bag(got.map { case (k, (_, s)) => (k, bag(tags(s))) }) ===
+          bag(oldCat.map { case (k, (_, s)) => (k, bag(tags(s))) }))
+        // within one partition each key's values fold in input order
+        for ((_, (_, s)) <- got; (_, idx) <- tags(s).groupBy(_._1))
+          assert(idx.map(_._2) === idx.map(_._2).sorted, s)
+        if (parts == 1) assert(bag(got) === bag(oldCat))
+      }
+    }
+  }
+
+  test("InMapperCombiner flushes at a forced bound and combines fully under the derived one") {
+    type R = (String, Int)
+    val sum = (a: R, b: R) => (a._1, a._2 + b._2)
+    val rows = Seq(("a", 1), ("a", 3), ("b", 2), (null, 4), (null, 6), ("a", 5))
+    def run(bound: Option[Int], in: Iterator[R] = rows.iterator) =
+      new InMapperCombiner[String, R](in, _._1, sum, bound).toList
+    // bound 1: every row is its own partial; bound 2: flush at the second key
+    assert(run(Some(1)) === rows.map(r => (r._1, r)))
+    assert(run(Some(2)).sortBy(_.toString) ===
+      List(("a", ("a", 4)), ("b", ("b", 2)), (null, (null, 10)), ("a", ("a", 5))).sortBy(_.toString))
+    assert(run(None).toMap === Map("a" -> ("a", 9), "b" -> ("b", 2), (null: String) -> (null, 10)))
+    // past the first size samples, 100 keys still fit the heap budget
+    val many = run(None, Iterator.tabulate(10000)(i => (s"k${i % 100}", 1)))
+    assert(many.size === 100 && many.forall(_._2._2 == 100))
+  }
+
   test("law: cogroup inner join ≡ driver-side group + intersect") {
     for ((ls, rs) <- samples(Gen.zip(kvGen, kvGen))) {
       val cogrouped = Pipe.memory(spark, ls).joinOn(Pipe.memory(spark, rs))(_._1, _._1)
