@@ -2,14 +2,17 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Baseline: brute-force cosine top-k (one scan, TakeOrdered — no
   * shuffle of the corpus). Scale paths: random-hyperplane LSH buckets
   * (candidates only within a bucket) and an IVF-style coarse partition
-  * (search only the probed cell). Dot products are `aggregate` /
-  * `zip_with` higher-order functions — codegen'd, no UDFs.
+  * (search only the probed cell). Cosine dot products go through the
+  * custom codegen kernel [[graft.plans.ArrayDotProduct]]; squared
+  * distances to centroids are `aggregate` / `zip_with` higher-order
+  * functions — codegen'd, no UDFs.
   *
   * Engine-portability: hyperplane weights derive from md5 of
   * (plane, dim) so the DuckDB oracle computes the identical planes;
@@ -544,8 +547,9 @@ object Similarity {
     * `iters` assign/recompute rounds. Like a production coarse-quantizer
     * trainer (MLlib KMeans does the same), the k tiny centroids live on
     * the driver between rounds and assignment is a map-side expression
-    * — each round costs ONE scan + ONE k×dim-group aggregate instead of
-    * a crossJoin + vector shuffle.
+    * — each round costs a scan plus the two aggregates of [[centroids]]
+    * ((cell, dim) means, then per-cell regrouping) instead of a
+    * crossJoin + vector shuffle.
     */
   def kmeansCellsLocal(embD: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Double])] = {
     def collectCents(df: DataFrame, cellCol: String, vecCol: String): Seq[(Int, Seq[Double])] =
@@ -679,6 +683,15 @@ object Similarity {
     ivfSearch(emb, queryId, k, cells, iters, nprobe)
   }
 
+  /** Schema of a [[writeIvfIndex]] index's cell-partitioned data
+    * (`cell` is the partition column). The writer casts to it and
+    * [[ivfSearchIndexed]] declares it, so opening the index runs no
+    * schema-inference job.
+    */
+  val IvfIndexSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("e", ArrayType(DoubleType)),
+    StructField("cell", IntegerType)))
+
   /** Train and WRITE an IVF index: the corpus assigned to k-means cells,
     * stored `partitionBy("cell")` so a probe's scan reads only the
     * probed cells' files — at rest, a probe touches nprobe/cells of the
@@ -695,6 +708,7 @@ object Similarity {
       emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
     val cents = kmeansCellsLocal(embD, cells, iters)
     assignCells(embD, cents)
+      .select(IvfIndexSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
     cents.toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
@@ -704,16 +718,17 @@ object Similarity {
     * query are computed on the driver from the stored centroids, and
     * the scan filter on the PARTITION column `cell` prunes to those
     * cells' files (pinned in PlanSpec) — no shuffle, no join, bounded
-    * top-k. `queryVec` arrives as a local vector so probing needs zero
-    * jobs before the pruned scan.
+    * top-k. `queryVec` arrives as a local vector and both reads declare
+    * their schema ([[graft.Tables.parquet]], [[IvfIndexSchema]]), so the
+    * only job before the pruned scan is the centroids' collect.
     */
   def ivfSearchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
       queryVec: Seq[Double], excludeId: Long, k: Int, nprobe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$path/_centroids").collect()
+    val cents = graft.Tables.parquet(spark, s"$path/_centroids").collect()
       .map(r => r.getAs[Int]("cell") -> r.getSeq[Double](r.fieldIndex("centroid"))).toSeq
     val probes = cents.map { case (c, cv) => (sq9(cv, queryVec), c) }.sorted.take(nprobe).map(_._2)
     val qCol = array(queryVec.map(lit): _*)
-    spark.read.parquet(path)
+    spark.read.schema(IvfIndexSchema).parquet(path)
       .filter(col("cell").isin(probes: _*) && col("vec_id") =!= excludeId)
       .select(col("vec_id"), round(cosine(col("e"), qCol), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
@@ -1507,57 +1522,126 @@ object Similarity {
     * and the SQL oracle agree bit-for-bit after any number of
     * iterations.
     *
-    * Seeds are the `k` lowest-id vectors (replayable). Per iteration:
-    * one scan computes every row's nearest centroid (centroids ride
-    * as literals — k·dim longs, the same bounded driver artifact as
-    * [[kmeansCellsLocal]]), one (cell, dim) aggregation produces the
-    * k·dim update sums. Returns per-cell member count + centroid
-    * checksum (Σ over dims) after the final update.
+    * Seeds are the `k` lowest-id vectors (replayable), as cells
+    * 0..k-1. Every row goes to its nearest centroid, ties to the
+    * lowest cell id; a cell left without members drops out and the
+    * others keep their ids. Returns per-cell member count + centroid
+    * checksum (Σ over dims) after the final update. Fails naming the
+    * vec_id on a null, ragged or null-element vector.
     *
-    * Scale: the per-iteration shuffle carries k·dim partial sums per
-    * map task (map-side combined), never vectors; assignment is a
-    * pure codegen scan. This IS Spark MLlib's k-means dataflow shape,
-    * with exactness traded for the trivial cost of integer ops.
+    * Scale: the quantized (vec_id, q) frame is persisted once and each
+    * round is ONE job — a `treeAggregate` whose fold assigns rows and
+    * adds them into per-cell `long[dim]` sums and counts, so only k·dim
+    * partial sums per partition travel, never vectors; `Math.*Exact`
+    * keeps ANSI's overflow error. The k·dim centroid longs live on the
+    * driver between rounds and ride the final assignment as literals,
+    * so the returned frame is a pure scan + per-cell count. This IS
+    * Spark MLlib's k-means dataflow shape, with exactness traded for
+    * the trivial cost of integer ops.
     */
   def kmeansInt(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val qv = emb.select(col("vec_id"), quantizeMicro(col("embedding")).as("q"))
+    require(k >= 1, s"kmeansInt: k >= 1, got $k")
+    val qv = graft.GraftCache.registered(
+      emb.select(col("vec_id"), quantizeMicro(col("embedding")).as("q")))
     val seeds = qv.orderBy(col("vec_id")).limit(k).collect()
-      .zipWithIndex.map { case (r, i) => i -> r.getSeq[Long](1) }
-    var cents: Seq[(Int, Seq[Long])] = seeds.toSeq
-
-    def assigned(cs: Seq[(Int, Seq[Long])]): DataFrame = {
-      // nearest centroid per row: k integer distances as literal-array
-      // zip_with folds, argmin with min-cell tie-break via least(structs)
-      val dists = cs.map { case (cell, c) =>
-        val cLit = array(c.map(lit): _*)
-        struct(
-          aggregate(zip_with(col("q"), cLit, (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, x) => acc + x).as("d"),
-          lit(cell).as("cell"))
-      }
-      qv.select(col("vec_id"), col("q"), least(dists: _*).getField("cell").as("cell"))
-    }
+    require(seeds.nonEmpty, "kmeansInt: empty input, no vector to seed a cell")
+    val dim = if (seeds.head.isNullAt(1)) 0 else seeds.head.getSeq[Any](1).length
+    var cents: Array[(Int, Array[Long])] =
+      seeds.zipWithIndex.map { case (r, i) => i -> intVector(r, dim) }
 
     for (_ <- 1 to iters) {
-      val a = assigned(cents)
-      val sums = a.select(col("cell"), posexplode(col("q")).as(Seq("pos", "v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      cents = sums.groupBy(_.getAs[Int]("cell")).map { case (cell, rows) =>
-        cell -> rows.sortBy(_.getAs[Int]("pos"))
-          .map(r => Math.floorDiv(r.getAs[Long]("s"), r.getAs[Long]("n"))).toSeq
-      }.toSeq.sortBy(_._1)
+      val cv = cents.map(_._2)
+      val acc = qv.rdd.treeAggregate(new LloydSums(cv.length, dim))(
+        (a, r) => a.add(cv, intVector(r, dim)), (a, b) => a.merge(b))
+      cents = cents.indices.filter(acc.counts(_) > 0).map { j =>
+        cents(j)._1 -> Array.tabulate(dim)(d => Math.floorDiv(acc.sums(j * dim + d), acc.counts(j)))
+      }.toArray
     }
 
+    // nearest centroid per row: k integer distances as literal-array
+    // zip_with folds, argmin with min-cell tie-break via least(structs)
+    // — the fold's rule, so the final assignment matches the rounds'
+    val dists = cents.toSeq.map { case (cell, c) =>
+      struct(
+        aggregate(zip_with(col("q"), array(c.toSeq.map(lit): _*), (a, b) => (a - b) * (a - b)),
+          lit(0L), (acc, x) => acc + x).as("d"),
+        lit(cell).as("cell"))
+    }
+    val nearest = if (dists.size == 1) dists.head else least(dists: _*)
+    // a null, ragged or null-element vector has a null distance to every
+    // centroid (zip_with pads with nulls): counting a row through this
+    // guard fails on such a row, naming it. The guard sits in the count,
+    // not the grouping key, so the key stays non-nullable and the join
+    // below infers no null filter that would evaluate `nearest` twice.
+    val member = when(col("nn.d").isNull, raise_error(concat(lit("kmeansInt: vec_id="),
+        coalesce(col("vec_id").cast("string"), lit("null")),
+        lit(s" has a null, ragged or null-element vector; every vector needs $dim non-null components"))))
+      .otherwise(lit(1))
     val sp = emb.sparkSession
     import sp.implicits._
-    val centDf = cents.map { case (cell, c) => (cell, c.sum) }
+    val centDf = cents.toSeq.map { case (cell, c) => (cell, c.sum) }
       .toDF("cell", "centroid_sum")
-    assigned(cents).groupBy(col("cell")).agg(count(lit(1)).cast("int").as("n"))
+    qv.select(col("vec_id"), nearest.as("nn"))
+      .groupBy(col("nn.cell").as("cell")).agg(count(member).cast("int").as("n"))
       .join(broadcast(centDf), "cell")
       .select(col("cell"), col("n"), col("centroid_sum"))
       .orderBy(col("cell"))
+  }
+
+  /** Row (vec_id, q) → q as `long[dim]`; fails naming the vec_id on a
+    * null, ragged or null-element vector.
+    */
+  private def intVector(r: org.apache.spark.sql.Row, dim: Int): Array[Long] = {
+    val q = if (r.isNullAt(1)) null else r.getSeq[java.lang.Long](1)
+    val what =
+      if (q == null) "a null vector"
+      else if (q.length != dim) s"${q.length} components"
+      else if (q.contains(null)) "a null element"
+      else null
+    require(what == null, s"kmeansInt: vec_id=${r.get(0)} has $what; every vector needs $dim non-null components")
+    q.iterator.map(_.longValue).toArray
+  }
+
+  /** One exact Lloyd round's fold state: per-cell sums (`k × dim`,
+    * row-major) and member counts over the centroids `cents`, which are
+    * ordered by cell id.
+    */
+  private final class LloydSums(k: Int, dim: Int) extends Serializable {
+    val sums = new Array[Long](k * dim)
+    val counts = new Array[Long](k)
+
+    def add(cents: Array[Array[Long]], v: Array[Long]): LloydSums = {
+      var best = 0
+      var bestD = 0L
+      var j = 0
+      while (j < k) {
+        val c = cents(j)
+        var d = 0L
+        var i = 0
+        while (i < dim) {
+          val x = Math.subtractExact(v(i), c(i))
+          d = Math.addExact(d, Math.multiplyExact(x, x))
+          i += 1
+        }
+        if (j == 0 || d < bestD) { best = j; bestD = d } // strict: ties keep the lower cell
+        j += 1
+      }
+      var i = 0
+      while (i < dim) {
+        sums(best * dim + i) = Math.addExact(sums(best * dim + i), v(i))
+        i += 1
+      }
+      counts(best) += 1
+      this
+    }
+
+    def merge(o: LloydSums): LloydSums = {
+      var i = 0
+      while (i < sums.length) { sums(i) = Math.addExact(sums(i), o.sums(i)); i += 1 }
+      i = 0
+      while (i < k) { counts(i) += o.counts(i); i += 1 }
+      this
+    }
   }
 
   /** SPARSE-vector cosine pairs: TF-IDF document vectors compared via

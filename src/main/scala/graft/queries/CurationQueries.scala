@@ -39,8 +39,7 @@ object CurationQueries {
     // itself; LayoutSpec measures the point of it (per-file min/max
     // tightness on both dimensions → file skipping on either).
     "q127_zorder_layout" -> ((s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory("graft_zorder")
-        .toString + "/docs"
+      val path = Q.tempDir("graft_zorder") + "/docs"
       graft.operators.Layout.zorderWrite(
         t(s, dir, "documents").select(col("doc_id"),
           least(col("n_chars"), lit(1023L)).as("x"),

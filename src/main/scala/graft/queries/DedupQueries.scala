@@ -822,7 +822,7 @@ object DedupQueries {
     // exact-verdict path is exercised.
     "q266_incremental_dedup_contract" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_dedup_idxc").toString
+      val path = Q.tempDir("graft_dedup_idxc")
       Dedup.writeDedupIndexContract(docs.filter(col("doc_id") < 400), "doc_id", "text", path)
       val batch = docs.filter(col("doc_id") >= 400)
         .unionByName(docs.filter(col("doc_id") === 5)
@@ -967,7 +967,7 @@ object DedupQueries {
     // the write-then-probe round trip is the point (as q101 for IVF).
     "q115_incremental_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
+      val path = Q.tempDir("graft_dedup_idx")
       Dedup.writeDedupIndex(docs.filter(col("doc_id") < 400), "doc_id", "text", path)
       // the natural >= 400 batch holds near-dups but no exact copy of a
       // corpus doc, so the batch re-ingests corpus doc 5 under a fresh
@@ -990,7 +990,7 @@ object DedupQueries {
     // Graded on the final committed corpus.
     "q134_corpus_refresh" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val base = java.nio.file.Files.createTempDirectory("graft_refresh").toString
+      val base = Q.tempDir("graft_refresh")
       val corpus = docs.filter(col("doc_id") < 400)
       graft.operators.Versioned.commit(s"$base/table", corpus)
       Dedup.writeDedupIndexContract(corpus, "doc_id", "text", s"$base/idx")
@@ -1122,8 +1122,7 @@ object DedupQueries {
     // path, not just the in-session plan PlanSpec pins.
     "q101_ann_ivf_indexed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = java.nio.file.Files.createTempDirectory("graft_ivf_idx")
-        .toString + "/index"
+      val path = Q.tempDir("graft_ivf_idx") + "/index"
       Similarity.writeIvfIndex(emb, path, cells = 8, iters = 0)
       val qv = emb.filter(col("vec_id") === 0)
         .select(Similarity.toDoubleVec(col("embedding")).as("e"))

@@ -379,7 +379,7 @@ object FeatureQueries {
     // small-files maintenance loop every table format needs.
     "q201_compact_vacuum" -> ((s, dir) => {
       import graft.operators.Versioned
-      val root = java.nio.file.Files.createTempDirectory("graft_compact").toString
+      val root = Q.tempDir("graft_compact")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
       Versioned.commit(root, docs.filter(col("doc_id") < 300).repartition(8))
       Versioned.upsert(s, root,
@@ -543,7 +543,7 @@ object FeatureQueries {
     // final state (same merged shape as q177's oracle).
     "q207_incr_view" -> ((s, dir) => {
       import graft.operators.Versioned
-      val root = java.nio.file.Files.createTempDirectory("graft_mv").toString
+      val root = Q.tempDir("graft_mv")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
       Versioned.commit(root, docs.filter(col("doc_id") < 400))
       val changes =

@@ -1,5 +1,8 @@
 package graft.queries
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,16 +35,16 @@ object Q {
     // cosine) over files small enough to arrive as ONE input split —
     // widen so the map side parallelizes. At production scale the scan
     // has thousands of splits and this branch is a no-op.
-    case "documents" => widen(spark, spark.read.parquet(s"$dir/$name.parquet"))
+    case "documents" => widen(spark, graft.Tables.table(spark, dir, name))
     // embeddings additionally pin the vector element type: every ANN/
     // quantization query assumes array<float>, and a regenerated
     // testdata drop to array<double> would shift r6-rounded cosines
     // (the round-8 events.ts lesson). Today the cast is a no-op
     // Catalyst folds away.
     case "embeddings" =>
-      widen(spark, spark.read.parquet(s"$dir/$name.parquet"))
+      widen(spark, graft.Tables.table(spark, dir, name))
         .withColumn("embedding", col("embedding").cast("array<float>"))
-    case _ => spark.read.parquet(s"$dir/$name.parquet")
+    case _ => graft.Tables.table(spark, dir, name)
   }
 
   /** Repartition up to the cluster's parallelism only when the scan
@@ -79,7 +82,7 @@ object Q {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = graft.Tables.parquet(spark, s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -88,6 +91,31 @@ object Q {
         df.withColumn("ts", to_timestamp(col("ts")))
     }
   }
+
+  /** A fresh temp dir for a query that round-trips data through files
+    * at rest, deleted with its contents when the JVM exits — not
+    * earlier, because the query returns a lazy DataFrame that reads
+    * those files whenever it runs.
+    */
+  def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    TempDirs.add(d)
+    d.toString
+  }
+
+  private lazy val TempDirs: ConcurrentLinkedQueue[Path] = {
+    val dirs = new ConcurrentLinkedQueue[Path]()
+    sys.addShutdownHook(dirs.forEach(d => deleteTree(d)))
+    dirs
+  }
+
+  /** Delete `root` and everything under it; a missing root is a no-op. */
+  private[graft] def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
 
   /** documents/embeddings are not in the driver's registered-view list
     * (TESTDATA.md names only the 8 star-schema tables), so their oracle

@@ -107,7 +107,7 @@ object QualityQueries {
     // per table v0/v1 row counts and the at-rest residue (must be 0).
     "q230_gdpr_erasure" -> ((s, dir) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("gdpr_").toString
+      val base = Q.tempDir("gdpr_")
       val cust = t(s, dir, "customer").select(
         col("c_custkey").cast("long").as("c_custkey"), col("c_nationkey"),
         Q.cents(col("c_acctbal")).as("acct_cents"))
@@ -168,8 +168,7 @@ object QualityQueries {
     // its keys); the evolved snapshot backfills untouched rows with
     // null — graded per lang on doc counts, scored counts and sums.
     "q237_schema_evolution" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("sev_")
-        .toString + "/docs"
+      val base = Q.tempDir("sev_") + "/docs"
       val d = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
       Versioned.commit(base, d)
@@ -203,8 +202,7 @@ object QualityQueries {
     "q239_orc_roundtrip" -> ((s, dir) => {
       val stats = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_orc")
-        .toString + "/out"
+      val path = Q.tempDir("graft_orc") + "/out"
       stats.write.format("orc").mode("overwrite").save(path)
       s.read.format("orc").load(path)
         .groupBy(col("lang"))
@@ -327,7 +325,7 @@ object QualityQueries {
     // counts and the clean sum — the quarantine gate a raw-feed loader
     // runs before anything downstream trusts the batch.
     "q244_permissive_ingest" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("csvq_").toString
+      val base = Q.tempDir("csvq_")
       val raw = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           when(col("doc_id") % 97 === 0, lit("not_a_number"))

@@ -209,8 +209,7 @@ object ScaleQueries {
     "q218_stats_drift" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_sdrift")
-        .toString + "/table"
+      val path = Q.tempDir("graft_sdrift") + "/table"
       graft.operators.Versioned.commit(path, docs.filter(col("doc_id") < 400))
       val batch = docs.filter(col("doc_id") >= 300 && col("doc_id") < 500)
         .select(col("doc_id"), lit("xx").as("lang"),
@@ -405,8 +404,7 @@ object ScaleQueries {
     "q149_version_diff" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vdiff")
-        .toString + "/table"
+      val path = Q.tempDir("graft_vdiff") + "/table"
       graft.operators.Versioned.commit(path, docs.filter(col("doc_id") < 400))
       val updates = docs.filter(col("doc_id") >= 300)
         .withColumn("n_chars", col("n_chars") + 1000000L)
@@ -500,8 +498,7 @@ object ScaleQueries {
     "q157_stats_pruned_read" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_skip")
-        .toString + "/zdocs"
+      val path = Q.tempDir("graft_skip") + "/zdocs"
       Layout.zorderWrite(docs, path, least(col("n_chars"), lit(1023)),
         pmod(col("doc_id"), lit(1024)), bits = 10, partitions = 8)
       Layout.writeManifest(s, path, Seq("n_chars"))
@@ -597,8 +594,7 @@ object ScaleQueries {
     "q163_versioned_skipping" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vskip")
-        .toString + "/table"
+      val path = Q.tempDir("graft_vskip") + "/table"
       graft.operators.Versioned.commit(path,
         docs.filter(col("doc_id") < 400), Seq("n_chars"))
       val updates = docs.filter(col("doc_id") >= 300)
@@ -626,8 +622,7 @@ object ScaleQueries {
     "q165_sorted_export" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), Q.cents(col("l_extendedprice")).as("price_cents"))
-      val path = java.nio.file.Files.createTempDirectory("graft_sorted")
-        .toString + "/byprice"
+      val path = Q.tempDir("graft_sorted") + "/byprice"
       Layout.sortedWrite(li, path, "price_cents", partitions = 8)
       Layout.prunedRead(s, path, "price_cents", 100000L, 2000000L)
         .agg(count(lit(1)).cast("long").as("n"),
@@ -736,8 +731,7 @@ object ScaleQueries {
     "q173_partitioned_table" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_ptab")
-        .toString + "/table"
+      val path = Q.tempDir("graft_ptab") + "/table"
       graft.operators.Versioned.commit(path, docs, Nil, Seq("lang"))
       graft.operators.Versioned.read(s, path)
         .filter(col("lang") === "en")
@@ -804,8 +798,7 @@ object ScaleQueries {
     "q177_apply_changes" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_cdc")
-        .toString + "/table"
+      val path = Q.tempDir("graft_cdc") + "/table"
       graft.operators.Versioned.commit(path, docs.filter(col("doc_id") < 400))
       val changes =
         docs.filter(col("doc_id") < 50)

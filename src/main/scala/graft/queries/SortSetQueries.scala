@@ -125,8 +125,7 @@ object SortSetQueries {
     "q126_sink_roundtrip" -> ((s, dir) => {
       val stats = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_tsv_sink")
-        .toString + "/out"
+      val path = Q.tempDir("graft_tsv_sink") + "/out"
       stats.write.format("graft.sources.TsvTap").option("path", path)
         .mode("overwrite").save()
       s.read.format("graft.sources.TsvTap").option("path", path)
@@ -145,8 +144,7 @@ object SortSetQueries {
     "q129_versioned_upsert" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_versioned")
-        .toString + "/table"
+      val path = Q.tempDir("graft_versioned") + "/table"
       graft.operators.Versioned.commit(path, docs.filter(col("doc_id") < 400))
       val updates = docs.filter(col("doc_id") >= 300)
         .withColumn("n_chars", col("n_chars") + 1000000L)

@@ -350,4 +350,156 @@ class PropertiesSpec extends SparkSpec {
       } catch { case _: IllegalArgumentException => () } // infeasible: refusal is the contract
     }
   }
+
+  test("law: kmeansInt's one-job fold rounds ≡ the posexplode/groupBy rounds (ties, negatives, empty cells, any partitioning)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.operators.Similarity
+    // kmeansInt before the fold, inlined: same seeds and assignment
+    // expression, centroids from a (cell, pos) sum + count per round.
+    // Output (cell, n, centroid_sum) like kmeansInt's, from its inner
+    // join of final counts with centroids.
+    def oldKmeans(emb: DataFrame, k: Int, iters: Int): Set[(Int, Int, Long)] = {
+      val qv = emb.select(col("vec_id"), Similarity.quantizeMicro(col("embedding")).as("q"))
+      var cents: Seq[(Int, Seq[Long])] = qv.orderBy(col("vec_id")).limit(k).collect()
+        .zipWithIndex.map { case (r, i) => i -> r.getSeq[Long](1) }.toSeq
+      def assigned(cs: Seq[(Int, Seq[Long])]): DataFrame = {
+        val dists = cs.map { case (cell, c) =>
+          struct(aggregate(zip_with(col("q"), array(c.map(lit): _*), (a, b) => (a - b) * (a - b)),
+            lit(0L), (acc, x) => acc + x).as("d"), lit(cell).as("cell"))
+        }
+        qv.select(col("vec_id"), col("q"),
+          (if (dists.size == 1) dists.head else least(dists: _*)).getField("cell").as("cell"))
+      }
+      for (_ <- 1 to iters) {
+        val sums = assigned(cents).select(col("cell"), posexplode(col("q")).as(Seq("pos", "v")))
+          .groupBy(col("cell"), col("pos"))
+          .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
+          .collect()
+        cents = sums.groupBy(_.getAs[Int]("cell")).map { case (cell, rows) =>
+          cell -> rows.sortBy(_.getAs[Int]("pos"))
+            .map(r => Math.floorDiv(r.getAs[Long]("s"), r.getAs[Long]("n"))).toSeq
+        }.toSeq.sortBy(_._1)
+      }
+      val n = assigned(cents).groupBy(col("cell")).count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1).toInt).toMap
+      cents.flatMap { case (cell, c) => n.get(cell).map(m => (cell, m, c.sum)) }.toSet
+    }
+    // a small pool of 3-d vectors (components j/7, negatives included)
+    // drawn with repeats: duplicates make exact distance ties and leave
+    // seeded cells empty when k exceeds the distinct count
+    val caseGen = for {
+      pool <- Gen.nonEmptyListOf(Gen.listOfN(3, Gen.chooseNum(-10, 10).map(_ / 7.0f))).map(_.take(5))
+      picks <- Gen.nonEmptyListOf(Gen.chooseNum(0, pool.size - 1)).map(_.take(24))
+    } yield (pool.size, picks.map(pool(_)))
+    // hand-made exact tie: (1, 0) sits halfway between seeds (0, 0) and (2, 0)
+    val tie = (3, List(List(0f, 0f), List(2f, 0f), List(1f, 0f), List(-1f, 0f), List(3f, 0f)))
+    for ((distinct, vecs) <- samples(caseGen, 4) :+ tie; parts <- Seq(1, 3, 16)) {
+      val emb = spark.sparkContext.parallelize(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }, parts)
+        .toDF("vec_id", "embedding")
+      for (k <- Seq(2, distinct + 2); iters <- Seq(0, 1, 3)) {
+        val got = Similarity.kmeansInt(emb, k, iters).collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
+        assert(got === oldKmeans(emb, k, iters), s"k=$k iters=$iters parts=$parts vecs=$vecs")
+        assert(got.toSeq.map(_._2).sum === vecs.size)
+        graft.GraftCache.releaseAll()
+      }
+    }
+  }
+
+  test("kmeansInt runs exactly one job per Lloyd round and guards its input by vec_id") {
+    import graft.operators.Similarity
+    val emb = spark.sparkContext.parallelize(
+      (0 until 40).map(i => (i.toLong, Seq(i % 5 - 2f, i % 3 * 0.5f, -i / 7f))), 3).toDF("vec_id", "embedding")
+    def buildJobs(iters: Int): Int = {
+      val n = jobsIn(spark)(Similarity.kmeansInt(emb, k = 4, iters = iters))
+      graft.GraftCache.releaseAll()
+      n
+    }
+    val base = buildJobs(0)
+    assert(buildJobs(1) === base + 1)
+    assert(buildJobs(3) === base + 3)
+
+    def failure(body: => Any): String = {
+      val e = intercept[Exception](body)
+      graft.GraftCache.releaseAll()
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    }
+    assert(failure(Similarity.kmeansInt(emb, k = 0, iters = 1)).contains("k >= 1"))
+    assert(failure(Similarity.kmeansInt(emb.filter("vec_id < 0"), k = 2, iters = 1)).contains("empty input"))
+    val ragged = Seq((0L, Seq(1f, 2f)), (1L, Seq(3f, 4f)), (7L, Seq(5f))).toDF("vec_id", "embedding")
+    val holed = Seq((0L, Seq(Some(1f), Some(2f))), (1L, Seq(Some(3f), Some(4f))), (7L, Seq(Some(5f), None)))
+      .toDF("vec_id", "embedding")
+    val nulled = Seq((0L, Some(Seq(1f, 2f))), (1L, Some(Seq(3f, 4f))), (7L, None)).toDF("vec_id", "embedding")
+    for (bad <- Seq(ragged, holed, nulled); iters <- Seq(0, 1)) {
+      // rounds fail in the fold; with no rounds, the final scan fails
+      val msg = failure(Similarity.kmeansInt(bad, k = 2, iters = iters).collect())
+      assert(msg.contains("kmeansInt: vec_id=7 has"), msg)
+    }
+    // a bad seed fails on the driver, before any round
+    assert(failure(Similarity.kmeansInt(ragged, k = 3, iters = 1)).contains("vec_id=7 has 1 components"))
+  }
+
+  test("law: Tables.parquet schema ≡ spark.read.parquet inference, and no open launches a job") {
+    import org.apache.spark.sql.types.StructType
+    import graft.operators.Similarity
+    def sameSchemaNoJob(path: String): Unit = {
+      val inferred = spark.read.parquet(path).schema
+      var declared: StructType = null
+      val jobs = jobsIn(spark) { declared = Tables.parquet(spark, path).schema }
+      assert(declared === inferred, path)
+      assert(jobs === 0, path)
+    }
+    val testdata = new java.io.File(sf001).getParent
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1");
+         f <- new java.io.File(s"$testdata/$sf").listFiles().sortBy(_.getName)
+         if f.getName.endsWith(".parquet"))
+      sameSchemaNoJob(f.getPath)
+
+    val root = java.nio.file.Files.createTempDirectory("graft_tables_law")
+    try {
+      // Spark-written multi-file directory (nested types, _SUCCESS, .crc)
+      val multi = s"$root/multi"
+      spark.range(0, 100, 1, 4)
+        .selectExpr("id", "cast(id as string) AS s", "array(id, id + 1) AS a",
+          "named_struct('x', id, 'y', cast(id AS double)) AS st", "map('k', id) AS m")
+        .write.parquet(multi)
+      assert(new java.io.File(multi).listFiles().count(_.getName.endsWith(".parquet")) > 1)
+      sameSchemaNoJob(multi)
+
+      // an IVF index: _centroids by footer, the cell-partitioned data by
+      // the declared schema; the probe's only job is the centroids' collect
+      val idx = s"$root/ivf"
+      val emb = graft.queries.Q.t(spark, sf001, "embeddings")
+      Similarity.writeIvfIndex(emb, idx, cells = 4, iters = 0)
+      sameSchemaNoJob(s"$idx/_centroids")
+      assert(spark.read.schema(Similarity.IvfIndexSchema).parquet(idx).schema ===
+        spark.read.parquet(idx).schema)
+      assert(jobsIn(spark)(Similarity.ivfSearchIndexed(spark, idx, Seq.fill(64)(0.1), 0L, 5, 2)) === 1)
+      graft.GraftCache.releaseAll()
+
+      // events under nanosAsLong, as Q.events reads it
+      val key = "spark.sql.legacy.parquet.nanosAsLong"
+      val before = spark.conf.getOption(key)
+      spark.conf.set(key, "true")
+      try sameSchemaNoJob(s"$sf001/events.parquet")
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+      // every table Q.t opens, including the widened and normalized ones
+      for (name <- Seq("events", "documents", "embeddings", "lineitem"))
+        assert(jobsIn(spark)(graft.queries.Q.t(spark, sf001, name)) === 0, name)
+    } finally graft.queries.Q.deleteTree(root)
+  }
+
+  test("Q.deleteTree removes a nested tree and ignores a missing root") {
+    val root = java.nio.file.Files.createTempDirectory("graft_tree")
+    java.nio.file.Files.createDirectories(root.resolve("a/b"))
+    java.nio.file.Files.writeString(root.resolve("a/b/f.txt"), "x")
+    java.nio.file.Files.writeString(root.resolve("g.txt"), "y")
+    graft.queries.Q.deleteTree(root)
+    assert(!java.nio.file.Files.exists(root))
+    graft.queries.Q.deleteTree(root)
+    val d = graft.queries.Q.tempDir("graft_tree_q")
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
+  }
 }
