@@ -1,12 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
 
 /** Table loaders over the driver-generated parquet testdata
   * (`TESTDATA.md`): TPC-H-ish star schema + `events` + `documents` +
@@ -17,40 +11,7 @@ import org.apache.spark.sql.types.StructType
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    parquet(spark, s"$dir/$name.parquet")
-
-  /** Open parquet at `path` without launching a Spark job.
-    * `spark.read.parquet` infers the schema in a one-task job that reads
-    * one footer; here the driver reads that footer itself and passes the
-    * schema to the reader. The conversion is Spark's own
-    * (`ParquetFileFormat.readSchemaFromFooter`): the schema Spark stored
-    * under `org.apache.spark.sql.parquet.row.metadata` if present, else
-    * `ParquetToSparkSchemaConverter` under the session's conf, so
-    * options like `spark.sql.legacy.parquet.nanosAsLong` apply as they
-    * would to inference. A directory uses its first data file by name,
-    * skipping names starting with `_` or `.` — the single file Spark's
-    * `mergeSchema=false` inference also trusts for the whole set.
-    * Nothing is memoized: each open reads its footer again.
-    */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(footerSchema(spark, path)).parquet(path)
-
-  private def footerSchema(spark: SparkSession, path: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val file =
-      if (!fs.getFileStatus(p).isDirectory) p
-      else fs.listStatus(p).iterator
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-        .map(_.getPath).minByOption(_.getName)
-        .getOrElse(throw new IllegalArgumentException(
-          s"Tables.parquet: no data file directly under $path; read a partitioned layout with a declared schema"))
-    val footer = new Footer(file, ParquetFooterReader.readFooter(
-      HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
-    ParquetFileFormat.readSchemaFromFooter(footer,
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-  }
+    spark.read.parquet(s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -683,15 +682,6 @@ object Similarity {
     ivfSearch(emb, queryId, k, cells, iters, nprobe)
   }
 
-  /** Schema of a [[writeIvfIndex]] index's cell-partitioned data
-    * (`cell` is the partition column). The writer casts to it and
-    * [[ivfSearchIndexed]] declares it, so opening the index runs no
-    * schema-inference job.
-    */
-  val IvfIndexSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType), StructField("e", ArrayType(DoubleType)),
-    StructField("cell", IntegerType)))
-
   /** Train and WRITE an IVF index: the corpus assigned to k-means cells,
     * stored `partitionBy("cell")` so a probe's scan reads only the
     * probed cells' files — at rest, a probe touches nprobe/cells of the
@@ -708,7 +698,6 @@ object Similarity {
       emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
     val cents = kmeansCellsLocal(embD, cells, iters)
     assignCells(embD, cents)
-      .select(IvfIndexSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
     cents.toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
@@ -718,17 +707,16 @@ object Similarity {
     * query are computed on the driver from the stored centroids, and
     * the scan filter on the PARTITION column `cell` prunes to those
     * cells' files (pinned in PlanSpec) — no shuffle, no join, bounded
-    * top-k. `queryVec` arrives as a local vector and both reads declare
-    * their schema ([[graft.Tables.parquet]], [[IvfIndexSchema]]), so the
-    * only job before the pruned scan is the centroids' collect.
+    * top-k. `queryVec` arrives as a local vector so probing needs zero
+    * jobs before the pruned scan.
     */
   def ivfSearchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
       queryVec: Seq[Double], excludeId: Long, k: Int, nprobe: Int): DataFrame = {
-    val cents = graft.Tables.parquet(spark, s"$path/_centroids").collect()
+    val cents = spark.read.parquet(s"$path/_centroids").collect()
       .map(r => r.getAs[Int]("cell") -> r.getSeq[Double](r.fieldIndex("centroid"))).toSeq
     val probes = cents.map { case (c, cv) => (sq9(cv, queryVec), c) }.sorted.take(nprobe).map(_._2)
     val qCol = array(queryVec.map(lit): _*)
-    spark.read.schema(IvfIndexSchema).parquet(path)
+    spark.read.parquet(path)
       .filter(col("cell").isin(probes: _*) && col("vec_id") =!= excludeId)
       .select(col("vec_id"), round(cosine(col("e"), qCol), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)

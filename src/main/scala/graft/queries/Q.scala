@@ -1,7 +1,6 @@
 package graft.queries
 
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,16 +34,16 @@ object Q {
     // cosine) over files small enough to arrive as ONE input split —
     // widen so the map side parallelizes. At production scale the scan
     // has thousands of splits and this branch is a no-op.
-    case "documents" => widen(spark, graft.Tables.table(spark, dir, name))
+    case "documents" => widen(spark, spark.read.parquet(s"$dir/$name.parquet"))
     // embeddings additionally pin the vector element type: every ANN/
     // quantization query assumes array<float>, and a regenerated
     // testdata drop to array<double> would shift r6-rounded cosines
     // (the round-8 events.ts lesson). Today the cast is a no-op
     // Catalyst folds away.
     case "embeddings" =>
-      widen(spark, graft.Tables.table(spark, dir, name))
+      widen(spark, spark.read.parquet(s"$dir/$name.parquet"))
         .withColumn("embedding", col("embedding").cast("array<float>"))
-    case _ => graft.Tables.table(spark, dir, name)
+    case _ => spark.read.parquet(s"$dir/$name.parquet")
   }
 
   /** Repartition up to the cluster's parallelism only when the scan
@@ -82,7 +81,7 @@ object Q {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = graft.Tables.parquet(spark, s"$dir/events.parquet")
+    val df = spark.read.parquet(s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -105,17 +104,9 @@ object Q {
 
   private lazy val TempDirs: ConcurrentLinkedQueue[Path] = {
     val dirs = new ConcurrentLinkedQueue[Path]()
-    sys.addShutdownHook(dirs.forEach(d => deleteTree(d)))
+    sys.addShutdownHook(dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)))
     dirs
   }
-
-  /** Delete `root` and everything under it; a missing root is a no-op. */
-  private[graft] def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val paths = Files.walk(root)
-      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-      finally paths.close()
-    }
 
   /** documents/embeddings are not in the driver's registered-view list
     * (TESTDATA.md names only the 8 star-schema tables), so their oracle

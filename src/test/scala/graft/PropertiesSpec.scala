@@ -440,66 +440,13 @@ class PropertiesSpec extends SparkSpec {
     assert(failure(Similarity.kmeansInt(ragged, k = 3, iters = 1)).contains("vec_id=7 has 1 components"))
   }
 
-  test("law: Tables.parquet schema ≡ spark.read.parquet inference, and no open launches a job") {
-    import org.apache.spark.sql.types.StructType
-    import graft.operators.Similarity
-    def sameSchemaNoJob(path: String): Unit = {
-      val inferred = spark.read.parquet(path).schema
-      var declared: StructType = null
-      val jobs = jobsIn(spark) { declared = Tables.parquet(spark, path).schema }
-      assert(declared === inferred, path)
-      assert(jobs === 0, path)
+  test("Q.tempDir creates a fresh directory per call") {
+    val a = graft.queries.Q.tempDir("graft_tmp_q")
+    val b = graft.queries.Q.tempDir("graft_tmp_q")
+    assert(a !== b)
+    for (d <- Seq(a, b)) {
+      val p = java.nio.file.Paths.get(d)
+      assert(java.nio.file.Files.isDirectory(p) && p.getFileName.toString.startsWith("graft_tmp_q"))
     }
-    val testdata = new java.io.File(sf001).getParent
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1");
-         f <- new java.io.File(s"$testdata/$sf").listFiles().sortBy(_.getName)
-         if f.getName.endsWith(".parquet"))
-      sameSchemaNoJob(f.getPath)
-
-    val root = java.nio.file.Files.createTempDirectory("graft_tables_law")
-    try {
-      // Spark-written multi-file directory (nested types, _SUCCESS, .crc)
-      val multi = s"$root/multi"
-      spark.range(0, 100, 1, 4)
-        .selectExpr("id", "cast(id as string) AS s", "array(id, id + 1) AS a",
-          "named_struct('x', id, 'y', cast(id AS double)) AS st", "map('k', id) AS m")
-        .write.parquet(multi)
-      assert(new java.io.File(multi).listFiles().count(_.getName.endsWith(".parquet")) > 1)
-      sameSchemaNoJob(multi)
-
-      // an IVF index: _centroids by footer, the cell-partitioned data by
-      // the declared schema; the probe's only job is the centroids' collect
-      val idx = s"$root/ivf"
-      val emb = graft.queries.Q.t(spark, sf001, "embeddings")
-      Similarity.writeIvfIndex(emb, idx, cells = 4, iters = 0)
-      sameSchemaNoJob(s"$idx/_centroids")
-      assert(spark.read.schema(Similarity.IvfIndexSchema).parquet(idx).schema ===
-        spark.read.parquet(idx).schema)
-      assert(jobsIn(spark)(Similarity.ivfSearchIndexed(spark, idx, Seq.fill(64)(0.1), 0L, 5, 2)) === 1)
-      graft.GraftCache.releaseAll()
-
-      // events under nanosAsLong, as Q.events reads it
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val before = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try sameSchemaNoJob(s"$sf001/events.parquet")
-      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-
-      // every table Q.t opens, including the widened and normalized ones
-      for (name <- Seq("events", "documents", "embeddings", "lineitem"))
-        assert(jobsIn(spark)(graft.queries.Q.t(spark, sf001, name)) === 0, name)
-    } finally graft.queries.Q.deleteTree(root)
-  }
-
-  test("Q.deleteTree removes a nested tree and ignores a missing root") {
-    val root = java.nio.file.Files.createTempDirectory("graft_tree")
-    java.nio.file.Files.createDirectories(root.resolve("a/b"))
-    java.nio.file.Files.writeString(root.resolve("a/b/f.txt"), "x")
-    java.nio.file.Files.writeString(root.resolve("g.txt"), "y")
-    graft.queries.Q.deleteTree(root)
-    assert(!java.nio.file.Files.exists(root))
-    graft.queries.Q.deleteTree(root)
-    val d = graft.queries.Q.tempDir("graft_tree_q")
-    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
   }
 }
