@@ -33,8 +33,17 @@ object Dedup {
     * conf, default 100000 ≈ 5e9 candidate pairs per bucket) before
     * planning the self-join; the LSH twins have no such cliff because
     * bucket cohabitation is bounded by similarity, not corpus size.
-    * The check is one count aggregate over `blocks` — which the callers
-    * persist anyway, so the scan is not wasted work.
+    * The check is one count aggregate over `blocks`, run as its own
+    * Spark job when called. Only some callers persist `blocks` first
+    * (`ngramJaccardPairs`' base, `nearDupByLshMulti`'s bands,
+    * `semanticDedupCellsContract`'s cell assignment), so the self-join
+    * reads the guard's scan back;
+    * `simhashPairs`' bands, the rare-shingle blocks of
+    * [[rareShingleBlockedPairs]] (both recall audits and
+    * [[containmentPairs]]), `nearDupExactBlocked`, `nearDupByLsh` and
+    * [[editDistancePairs]] are not persisted, so there the guard's scan
+    * is recomputed by the join (ROADMAP direction B: fold the check
+    * into the join's own materialization).
     */
   private[graft] def requireBoundedBlocks(blocks: DataFrame, keys: Seq[Column],
       lshAlternative: String): Unit = {
@@ -75,8 +84,24 @@ object Dedup {
   val MinhashA: Seq[Long] = Seq(1299721L, 15485863L, 32452843L, 49979687L, 67867967L, 86028121L, 104395301L, 122949823L)
   val MinhashB: Seq[Long] = Seq(7368787L, 104729L, 41729L, 6291469L, 193877777L, 10619863L, 413158511L, 201326611L)
 
-  def permuted(h: Column, i: Int): Column =
+  /** A MinHash permutation family: permutation `i` of the base hash
+    * column. [[permuted]] (fixed table, i < 8) and [[permutedAffine]]
+    * (any i) are the two families; the signature aggregate, the pair
+    * core and [[lshRecallAudit]] take one as an argument.
+    */
+  type Permutation = (Column, Int) => Column
+
+  /** Fixed-table permutation `i` (the legacy q50/q51 family). Only 8
+    * permutations exist, so a signature wider than 8 fails here, at
+    * plan build, naming the family that has no limit.
+    */
+  def permuted(h: Column, i: Int): Column = {
+    require(i >= 0 && i < MinhashA.length,
+      s"permuted: permutation $i is past the fixed table (${MinhashA.length} entries, so k <= " +
+        s"${MinhashA.length}): use the index-generated permutedAffine family for wider " +
+        "signatures (minhashPairsContract, or pairsFromHashes/lshRecallAudit with perm = permutedAffine)")
     pmod(lit(MinhashA(i)) * h + lit(MinhashB(i)), lit(P))
+  }
 
   /** Exact duplicate groups: one surviving id + copy count per distinct
     * normalized text. Single hash-aggregate; at scale, grouping on the
@@ -108,28 +133,38 @@ object Dedup {
       .select(col("doc_id"), h31(col("shingle")).as("h"))
   }
 
-  /** MinHash signatures from hashed shingles: doc_id, mh0..mh{k-1}.
+  /** MinHash signatures from hashed shingles: doc_id, mh0..mh{k-1}
+    * under the permutation family `perm`, then the `sets` columns.
     * One grouped min-aggregate (map-side combined), k permutations as
-    * expressions over the same base hash.
+    * expressions over the same base hash. The ONE signature aggregate:
+    * the pair core appends its `array<int>` hash set
+    * ([[intHashSet]]), the at-rest index writers and probers their
+    * `array<bigint>` one ([[longHashSet]]), so signatures and sets
+    * come out of a single aggregation (the q51 lesson).
     */
-  def signaturesFromHashes(sh: DataFrame, k: Int = 8): DataFrame =
-    sh.groupBy(col("doc_id"))
-      .agg(min(permuted(col("h"), 0)).as("mh0"),
-        (1 until k).map(i => min(permuted(col("h"), i)).as(s"mh$i")): _*)
+  def signaturesFromHashes(sh: DataFrame, k: Int = 8, perm: Permutation = permuted,
+      sets: Seq[Column] = Nil): DataFrame = {
+    require(k >= 1, s"signature width k must be >= 1, got $k")
+    val aggs = (0 until k).map(i => min(perm(col("h"), i)).as(s"mh$i")) ++ sets
+    sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Sorted distinct hash set as `array<int>`: `h` is a 31-bit hash,
+    * so the cast is lossless and the sort order is unchanged — §2.3
+    * narrower types, halving the set payload in cached frames and in
+    * the verify joins' replication.
+    */
+  private def intHashSet: Column = sort_array(collect_set(col("h").cast("int"))).as("hs")
+
+  /** Sorted distinct hash set as `array<bigint>` — the at-rest dedup
+    * index's `sets/` format (ROADMAP item 5 narrows it behind a
+    * version).
+    */
+  private def longHashSet: Column = sort_array(collect_set(col("h"))).as("hs")
 
   /** MinHash signatures over 3-word shingles: doc_id, mh0..mh{k-1}. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String, k: Int = 8): DataFrame =
     signaturesFromHashes(shingleHashes(docs, idCol, textCol), k)
-
-  /** [[signaturesFromHashes]] over the index-generated affine family —
-    * any width k, no constant table (the [[permutedAffine]] family),
-    * so contract-derived geometries like [[minhashGeometryFor]]'s
-    * (3, 10) = 30 permutations are expressible.
-    */
-  def signaturesFromHashesAffine(sh: DataFrame, k: Int): DataFrame =
-    sh.groupBy(col("doc_id"))
-      .agg(min(permutedAffine(col("h"), 0)).as("mh0"),
-        (1 until k).map(i => min(permutedAffine(col("h"), i)).as(s"mh$i")): _*)
 
   /** (doc_id, band, band_key) rows for a signature frame — the banding
     * used by [[minhashCandidates]] and stored at rest by
@@ -170,13 +205,12 @@ object Dedup {
     * costs more than the nothing it saves — r12's unconditional
     * persist took q72 (bands = 1) from 0.37 s to 2.02 s with no code
     * change to the query. Gate: persist only at
-    * `bands >= graft.dedup.bandCacheMinBands` (default 8 — between
-    * the legacy 1–4 band family and the shallowest contract geometry;
-    * measured break-even in NOTES_r13).
+    * `bands >= BandCacheMinBands` = 8 — between the legacy 1–4 band
+    * family and the shallowest contract geometry (measured break-even
+    * in NOTES_r13). The constant replaces the former conf key
+    * `graft.dedup.bandCacheMinBands`, which no caller set.
     */
   def minhashCandidates(sigs: DataFrame, k: Int = 8, bands: Int = 2): DataFrame = {
-    val minBands = sigs.sparkSession.conf
-      .get("graft.dedup.bandCacheMinBands", "8").toInt
     // The narrow branch deliberately does NOT pin a shuffle join the
     // way [[simhashPairs]] does. The simhash trap (Generate's size
     // estimate is its child's, so a huge banded frame can still plan
@@ -192,7 +226,7 @@ object Dedup {
     // the narrow family 1.6x at sf0.1 (6.06 → 9.41 s over
     // q51/q67/q72/q115) for no x100 change.
     val banded =
-      if (bands >= minBands)
+      if (bands >= BandCacheMinBands)
         graft.GraftCache.registered(
           bandKeys(sigs, k, bands).repartition(col("band"), col("band_key")))
       else bandKeys(sigs, k, bands)
@@ -208,6 +242,9 @@ object Dedup {
     if (bands == 1) cand else cand.distinct()
   }
 
+  /** Fewest bands at which [[minhashCandidates]] persists its banded frame. */
+  private[graft] val BandCacheMinBands = 8
+
   /** Exact Jaccard over shingle sets for candidate pairs — the verify
     * step after LSH banding.
     */
@@ -222,13 +259,7 @@ object Dedup {
     * shared with signature computation.
     */
   def jaccardVerifyHashed(sh: DataFrame, candidates: DataFrame, threshold: Double): DataFrame =
-    verifyCandidatesWithSets(candidates,
-      // int sets: h is a 31-bit hash, so the cast is lossless and the
-      // sort order is unchanged — §2.3 narrower types, halves the hs
-      // payload the verify joins replicate per candidate pair (the
-      // dominant bytes of every blocked-Jaccard verify at soak tiers)
-      sh.groupBy(col("doc_id"))
-        .agg(sort_array(collect_set(col("h").cast("int"))).as("hs")), threshold)
+    verifyCandidatesWithSets(candidates, sh.groupBy(col("doc_id")).agg(intHashSet), threshold)
 
   /** Shared verify tail: attach each candidate pair's (doc_id, hs) hash
     * sets via two hash joins (AQE broadcasts the set side when it
@@ -244,10 +275,15 @@ object Dedup {
     */
   private def verifyCandidatesWithSets(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
     scoredCandidates(cand, sets)
-      .select(col("doc_a"), col("doc_b"),
-        round(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"), 6).as("jaccard"))
+      .select(col("doc_a"), col("doc_b"), jaccardFromCounts.as("jaccard"))
       .filter(col("jaccard") >= threshold)
+
+  /** round(|A ∩ B| / |A ∪ B|, 6) from the `inter`, `na`, `nb` counts —
+    * the one Jaccard the pair verify and the index probe both test
+    * against their threshold (the oracle rounds identically).
+    */
+  private def jaccardFromCounts: Column =
+    round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")).cast("double"), 6)
 
   /** Candidate pairs annotated with (|A ∩ B|, |A|, |B|) — the shared
     * scoring shape both the Jaccard and the containment verify tails
@@ -289,15 +325,16 @@ object Dedup {
     * broadcasts the set side when it fits) so per-pair arrays never
     * cross a shuffle. On high-collision corpora this is the difference
     * between shuffling kilobytes and shuffling the candidate arrays.
+    *
+    * Every MinHash pair variant is this core at a geometry: k
+    * permutations of family `perm` in `bands` bands of k / bands rows.
+    * The legacy variants ([[minhashPairs]], [[ngramJaccardPairsLsh]])
+    * use the fixed [[permuted]] table (k <= 8); the contract, budget
+    * and auto variants pass [[permutedAffine]] with k = rows · bands.
     */
-  def pairsFromHashes(sh: DataFrame, k: Int, bands: Int, threshold: Double): DataFrame = {
-    // hs as array<int>: the 31-bit hash is lossless in an int and the
-    // sort order is unchanged — §2.3 narrower types, halves the set
-    // payload in the cached frame and in the verify joins' replication
-    val sigSets = graft.GraftCache.registered(sh.groupBy(col("doc_id"))
-      .agg(min(permuted(col("h"), 0)).as("mh0"),
-        (1 until k).map(i => min(permuted(col("h"), i)).as(s"mh$i")) :+
-          sort_array(collect_set(col("h").cast("int"))).as("hs"): _*))
+  def pairsFromHashes(sh: DataFrame, k: Int, bands: Int, threshold: Double,
+      perm: Permutation = permuted): DataFrame = {
+    val sigSets = graft.GraftCache.registered(signaturesFromHashes(sh, k, perm, Seq(intHashSet)))
     // band join + skinny-candidate dedup and the verify tail are the
     // single shared implementations — the extra hs column rides along
     // harmlessly through minhashCandidates' projection
@@ -330,7 +367,7 @@ object Dedup {
     * recall as r grows (P ≈ 1-(1-J^r)^2). Workloads needing a FIXED
     * recall floor at a given threshold should derive (rows, bands)
     * from the contract with [[minhashGeometryFor]] and pass them to
-    * [[minhashPairs]]/[[pairsFromHashesAffine]]; [[lshRecallAudit]]
+    * [[pairsFromHashes]] with [[permutedAffine]]; [[lshRecallAudit]]
     * (q253) measures the resulting curve on the actual corpus.
     */
   def minhashRowsFor(n: Long, targetBucket: Long = 250L): Int =
@@ -435,19 +472,7 @@ object Dedup {
       candPerRow: Long = 64L): DataFrame = {
     val (r, b) = minhashGeometryForBudget(designN,
       math.round(threshold * 1000000L), targetRecallMicro, bgMicro, candPerRow)
-    pairsFromHashesAffine(shingleHashes(docs, idCol, textCol), r, b, threshold)
-  }
-
-  /** [[pairsFromHashes]] over the affine permutation family with
-    * dynamic signature width k = 2·rows — the same one-aggregation /
-    * skinny-band-join / broadcastable-verify shape, parameterized so
-    * [[minhashPairsAuto]] can size rows from the corpus count.
-    */
-  def pairsFromHashesAffine(sh: DataFrame, rows: Int, bands: Int, threshold: Double): DataFrame = {
-    val k = rows * bands
-    val sigSets = graft.GraftCache.registered(sigSetsAffine(sh, k))
-    verifyCandidatesWithSets(minhashCandidates(sigSets, k, bands),
-      sigSets.select(col("doc_id"), col("hs")), threshold)
+    pairsFromHashes(shingleHashes(docs, idCol, textCol), r * b, b, threshold, permutedAffine)
   }
 
   /** [[minhashPairs]] at a CONTRACT-derived geometry: (rows, bands)
@@ -473,7 +498,7 @@ object Dedup {
       bgMicro: Long = 100000L, maxFpMicro: Long = 10000L): DataFrame = {
     val (r, b) = minhashGeometryFor(math.round(threshold * 1000000L),
       targetRecallMicro, bgMicro, maxFpMicro)
-    pairsFromHashesAffine(shingleHashes(docs, idCol, textCol), r, b, threshold)
+    pairsFromHashes(shingleHashes(docs, idCol, textCol), r * b, b, threshold, permutedAffine)
   }
 
   /** [[minhashPairs]] with the band width sized from the corpus count
@@ -488,8 +513,8 @@ object Dedup {
     */
   def minhashPairsAuto(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, targetBucket: Long = 250L): DataFrame =
-    pairsFromHashesAffine(shingleHashes(docs, idCol, textCol),
-      minhashRowsFor(docs.count(), targetBucket), 2, threshold)
+    pairsFromHashes(shingleHashes(docs, idCol, textCol),
+      2 * minhashRowsFor(docs.count(), targetBucket), 2, threshold, permutedAffine)
 
   /** LSH-banded token-Jaccard near-dup pairs — the 100 TB alternative
     * to [[ngramJaccardPairs]]: same verified token-set Jaccard, but
@@ -572,11 +597,6 @@ object Dedup {
         "derive (bits, bands) from simhashGeometryFor(maxHamming, n)")
     val bandBits = bits / bands
     val sh = graft.GraftCache.registered(simhash(docs, idCol, textCol, bits))
-    // posexplode over bands, not a bands-way union of per-band selects:
-    // same rationale (and measured lesson) as [[bandKeys]] — one scan
-    // of the cached signature frame emits every (band, band_key) and
-    // the partition count stays flat, where the union form multiplies
-    // task count by `bands` on both self-join sides for no work.
     // posexplode over bands, not a bands-way union of per-band selects
     // (one scan of the cached signature frame, flat partition count —
     // the [[bandKeys]] lesson). TRAP that comes with it: Catalyst's
@@ -784,20 +804,10 @@ object Dedup {
     require(bands >= 2 && bits % bands == 0,
       s"bands must be >= 2 and divide bits, got (bits=$bits, bands=$bands)")
     val bandBits = bits / bands
-    val texts = graft.GraftCache.registered(docs
-      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("txt"))
-      .groupBy(col("txt"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("m")))
+    val texts = collapseTexts(docs, idCol, textCol)
     // one token pass feeds BOTH the shingle blocking and the simhash
     val sh = graft.GraftCache.registered(
       shingleHashes(texts, "doc_id", "txt").distinct())
-    val rare = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .select(col("h"))
-    val blocked = sh.join(rare, "h")
-    requireBoundedBlocks(blocked, Seq(col("h")),
-      s"a smaller maxDf (currently $maxDf: rare-shingle blocking saturates when maxDf " +
-        "admits boilerplate shingles)")
     // The truth pair set is persisted so the TRUTH JOIN (rare-shingle
     // blocked self-join + distinct — the expensive quadratic-ish stage)
     // is cache-isolated from the band probe below: without this the
@@ -807,11 +817,7 @@ object Dedup {
     // warm 93-179 s run-to-run spread at the x100 soak tier, contained
     // only by the GC-retry). Bounded: the blocked join is behind
     // requireBoundedBlocks, so truth volume is linear in corpus size.
-    val cand = graft.GraftCache.registered(
-      blocked.as("l").join(blocked.as("r"),
-          col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id"))
-        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-        .distinct())
+    val cand = graft.GraftCache.registered(rareShingleBlockedPairs(sh, maxDf))
     val sig = graft.GraftCache.registered(
       simhash(texts, "doc_id", "txt", bits)
         .join(texts.select(col("doc_id"), col("m")), "doc_id"))
@@ -829,27 +835,78 @@ object Dedup {
       expr(s"(sh_a >> ${b * bandBits}) % ${1L << bandBits}") ===
         expr(s"(sh_b >> ${b * bandBits}) % ${1L << bandBits}")
     }.reduce(_ || _)
-    val cross = cand
+    val truth = cand
       .join(sig.select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"),
         col("m").as("m_a")), "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("simhash").as("sh_b"),
         col("m").as("m_b")), "doc_b")
       .withColumn("hamming", expr("cast(bit_count(sh_a ^ sh_b) as int)"))
       .filter(col("hamming") <= maxHammingAudit)
-      .withColumn("caught", when(bandAgree, 1L).otherwise(0L))
-      .groupBy(col("hamming").as("h_bucket"))
-      .agg(sum(expr("m_a * m_b")).as("n_truth"),
-        sum(expr("m_a * m_b * caught")).as("n_caught"))
-    val within = texts.filter(col("m") >= 2)
+      .select(col("hamming").as("h_bucket"), col("m_a"), col("m_b"),
+        when(bandAgree, 1L).otherwise(0L).as("caught"))
+    recallCurve(truth, texts, "h_bucket", 0)
+  }
+
+  /** The recall audits' first stage: identical TEXTS collapsed to one
+    * representative, (txt, doc_id = min id, m = copies), persisted —
+    * it feeds both the shingling and the multiplicity joins. One cheap
+    * string shuffle removes replica mass before any shingling: at the
+    * x100 soak tier, shingling 450k representatives instead of 45M
+    * chunks. Every hashed feature is a pure function of the text, so
+    * the collapse is exact.
+    */
+  private def collapseTexts(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    graft.GraftCache.registered(docs
+      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("txt"))
+      .groupBy(col("txt"))
+      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("m")))
+
+  /** Rare-shingle blocked pairs (doc_a < doc_b): two docs pair iff they
+    * share a shingle hash whose document frequency in `sh` is in
+    * [2, maxDf] — entity-resolution blocking, independent of any LSH
+    * geometry. `sh` holds distinct (doc_id, h) rows. The block
+    * populations are checked by [[requireBoundedBlocks]] (one job, at
+    * call time) before the blocked self-join is planned; per-shingle
+    * fan-out is at most maxDf². The truth set of both recall audits
+    * (which persist it) and the candidates of [[containmentPairs]]
+    * (which does not).
+    */
+  private[graft] def rareShingleBlockedPairs(sh: DataFrame, maxDf: Int): DataFrame = {
+    val rare = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df").between(2, maxDf))
+      .select(col("h"))
+    val blocked = sh.join(rare, "h")
+    requireBoundedBlocks(blocked, Seq(col("h")),
+      s"a smaller maxDf (currently $maxDf: rare-shingle blocking saturates when maxDf admits boilerplate shingles)")
+    blocked.as("l").join(blocked.as("r"),
+        col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id"))
+      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+      .distinct()
+  }
+
+  /** The recall audits' tail: per `bucket`, the truth and caught pair
+    * counts weighted by class multiplicity (m_a · m_b; `caught` is 0 or
+    * 1), plus the within-class pairs of `classes` (m ≥ 2 copies give
+    * m(m−1)/2 pairs, identical and so always caught) as one analytic
+    * row at `withinBucket`, and `recall_micro` = caught · 1e6 div
+    * truth. The numerator is DECIMAL(38,0): weighted pair counts reach
+    * ~1e13 on replica corpora, so × 1e6 would wrap a long (the q243
+    * sMAPE precedent); div on decimals floors exactly like // does.
+    */
+  private def recallCurve(truth: DataFrame, classes: DataFrame, bucket: String,
+      withinBucket: Int): DataFrame = {
+    val cross = truth.groupBy(col(bucket))
+      .agg(sum(expr("m_a * m_b")).as("n_truth"), sum(expr("m_a * m_b * caught")).as("n_caught"))
+    val within = classes.filter(col("m") >= 2)
       .agg(sum(expr("m * (m - 1) div 2")).as("n_truth"))
       .filter(col("n_truth") > 0)
-      .select(lit(0).as("h_bucket"), col("n_truth"), col("n_truth").as("n_caught"))
+      .select(lit(withinBucket).as(bucket), col("n_truth"), col("n_truth").as("n_caught"))
     cross.unionByName(within)
-      .groupBy(col("h_bucket"))
+      .groupBy(col(bucket))
       .agg(sum(col("n_truth")).as("n_truth"), sum(col("n_caught")).as("n_caught"))
       .withColumn("recall_micro",
         expr("cast((cast(n_caught as decimal(38,0)) * 1000000) div n_truth as bigint)"))
-      .orderBy(col("h_bucket"))
+      .orderBy(col(bucket))
   }
 
   /** Duplicate-cluster assignment from near-dup pairs: `iters` rounds
@@ -1399,12 +1456,16 @@ object Dedup {
     * buckets are bit-identical to in-session LSH.
     */
   def writeDedupIndex(corpus: DataFrame, idCol: String, textCol: String, path: String,
-      k: Int = 8, bands: Int = 2): Unit = {
-    val sigSets = graft.GraftCache.registered(
-      shingleHashes(corpus, idCol, textCol).groupBy(col("doc_id"))
-        .agg(min(permuted(col("h"), 0)).as("mh0"),
-          (1 until k).map(i => min(permuted(col("h"), i)).as(s"mh$i")) :+
-            sort_array(collect_set(col("h"))).as("hs"): _*))
+      k: Int = 8, bands: Int = 2): Unit =
+    writeIndexTables(corpus, idCol, textCol, path, k, bands, permuted)
+
+  /** The index writer shared by [[writeDedupIndex]] and
+    * [[writeDedupIndexContract]]: `fingerprints/`, `bands/` and
+    * `sets/` from one persisted signature/set aggregate.
+    */
+  private def writeIndexTables(corpus: DataFrame, idCol: String, textCol: String,
+      path: String, k: Int, bands: Int, perm: Permutation): Unit = {
+    val sigSets = indexSigSets(corpus, idCol, textCol, k, perm)
     corpus.select(fingerprint(col(textCol)).as("fp")).distinct()
       .write.mode("overwrite").parquet(s"$path/fingerprints")
     bandKeys(sigSets, k, bands)
@@ -1412,6 +1473,16 @@ object Dedup {
     sigSets.select(col("doc_id"), col("hs"))
       .write.mode("overwrite").parquet(s"$path/sets")
   }
+
+  /** The index's persisted signature/set aggregate: k mins of family
+    * `perm` plus the `array<bigint>` set — ONE definition for the
+    * writers and the probers, so an index written today always agrees
+    * with a batch signed tomorrow.
+    */
+  private def indexSigSets(docs: DataFrame, idCol: String, textCol: String, k: Int,
+      perm: Permutation): DataFrame =
+    graft.GraftCache.registered(
+      signaturesFromHashes(shingleHashes(docs, idCol, textCol), k, perm, Seq(longHashSet)))
 
   /** Incremental dedup of a new batch against a [[writeDedupIndex]]
     * index: per new doc, verdict `exact_dup` (fingerprint already in
@@ -1430,22 +1501,18 @@ object Dedup {
     * collision counts.
     */
   def dedupAgainstIndex(newDocs: DataFrame, idCol: String, textCol: String, path: String,
-      threshold: Double = 0.6, k: Int = 8, bands: Int = 2): DataFrame = {
-    val sigSets = graft.GraftCache.registered(
-      shingleHashes(newDocs, idCol, textCol).groupBy(col("doc_id"))
-        .agg(min(permuted(col("h"), 0)).as("mh0"),
-          (1 until k).map(i => min(permuted(col("h"), i)).as(s"mh$i")) :+
-            sort_array(collect_set(col("h"))).as("hs"): _*))
-    dedupAgainstIndexCore(newDocs, idCol, textCol, path, sigSets, k, bands, threshold)
-  }
+      threshold: Double = 0.6, k: Int = 8, bands: Int = 2): DataFrame =
+    dedupAgainstIndexCore(newDocs, idCol, textCol, path, k, bands, threshold, permuted)
 
   /** The probe side shared by [[dedupAgainstIndex]] (fixed-table
     * signatures) and [[dedupAgainstIndexContract]] (affine signatures
-    * at the index's persisted geometry): exact fingerprint semi-join,
-    * band-keyed candidate join, sorted-intersect verify.
+    * at the index's persisted geometry): signs the batch with family
+    * `perm` at width k, then exact fingerprint semi-join, band-keyed
+    * candidate join, sorted-intersect verify.
     */
   private def dedupAgainstIndexCore(newDocs: DataFrame, idCol: String, textCol: String,
-      path: String, sigSets: DataFrame, k: Int, bands: Int, threshold: Double): DataFrame = {
+      path: String, k: Int, bands: Int, threshold: Double, perm: Permutation): DataFrame = {
+    val sigSets = indexSigSets(newDocs, idCol, textCol, k, perm)
     val spark = newDocs.sparkSession
     val idxFp = spark.read.parquet(s"$path/fingerprints")
     val idxBands = spark.read.parquet(s"$path/bands")
@@ -1465,8 +1532,7 @@ object Dedup {
       .select(col("doc_id"),
         graft.plans.SortedIntersectCount.sorted_intersect_count(col("hs"), col("corpus_hs")).as("inter"),
         size(col("hs")).as("na"), size(col("corpus_hs")).as("nb"))
-      .filter(round(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")).cast("double"), 6) >= threshold)
+      .filter(jaccardFromCounts >= threshold)
       .select(col("doc_id")).distinct()
       .withColumn("v_near", lit("near_dup"))
     base.select(col("doc_id"))
@@ -1475,17 +1541,6 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("v_exact"), col("v_near"), lit("kept")).as("verdict"))
   }
-
-  /** Affine-family signature/set aggregate at width `k` — the builder
-    * shared by [[pairsFromHashesAffine]]-style in-session pairing and
-    * the contract index write/probe sides (ONE definition, so an index
-    * written today always agrees with a batch signed tomorrow).
-    */
-  private def sigSetsAffine(sh: DataFrame, k: Int): DataFrame =
-    sh.groupBy(col("doc_id"))
-      .agg(min(permutedAffine(col("h"), 0)).as("mh0"),
-        (1 until k).map(i => min(permutedAffine(col("h"), i)).as(s"mh$i")) :+
-          sort_array(collect_set(col("h"))).as("hs"): _*)
 
   /** [[writeDedupIndex]] at a CONTRACT-derived geometry, with the
     * geometry PERSISTED: (rows, bands) come from [[minhashGeometryFor]]
@@ -1506,17 +1561,9 @@ object Dedup {
       bgMicro: Long = 100000L, maxFpMicro: Long = 10000L): Unit = {
     val thresholdMicro = math.round(threshold * 1000000L)
     val (r, b) = minhashGeometryFor(thresholdMicro, targetRecallMicro, bgMicro, maxFpMicro)
-    val k = r * b
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sigSets = graft.GraftCache.registered(
-      sigSetsAffine(shingleHashes(corpus, idCol, textCol), k))
-    corpus.select(fingerprint(col(textCol)).as("fp")).distinct()
-      .write.mode("overwrite").parquet(s"$path/fingerprints")
-    bandKeys(sigSets, k, b)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    sigSets.select(col("doc_id"), col("hs"))
-      .write.mode("overwrite").parquet(s"$path/sets")
+    writeIndexTables(corpus, idCol, textCol, path, r * b, b, permutedAffine)
     Seq((r, b, thresholdMicro))
       .toDF("rows", "bands", "threshold_micro")
       .write.mode("overwrite").parquet(s"$path/_geometry")
@@ -1546,10 +1593,7 @@ object Dedup {
   def dedupAgainstIndexContract(newDocs: DataFrame, idCol: String, textCol: String,
       path: String, geometry: (Int, Int, Double)): DataFrame = {
     val (r, b, threshold) = geometry
-    val k = r * b
-    val sigSets = graft.GraftCache.registered(
-      sigSetsAffine(shingleHashes(newDocs, idCol, textCol), k))
-    dedupAgainstIndexCore(newDocs, idCol, textCol, path, sigSets, k, b, threshold)
+    dedupAgainstIndexCore(newDocs, idCol, textCol, path, r * b, b, threshold, permutedAffine)
   }
 
   /** Read a [[writeDedupIndexContract]] index's persisted geometry:
@@ -1656,17 +1700,7 @@ object Dedup {
     val sh = graft.GraftCache.registered(
       shingleHashes(docs, idCol, textCol).distinct())
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val rare = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .select(col("h"))
-    val blocked = sh.join(rare, "h")
-    requireBoundedBlocks(blocked, Seq(col("h")),
-      s"a smaller maxDf (currently $maxDf: rare-shingle blocking saturates when maxDf admits boilerplate shingles)")
-    val cand = blocked.as("l").join(blocked.as("r"),
-        col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-      .distinct()
-    val inter = cand
+    val inter = rareShingleBlockedPairs(sh, maxDf)
       .join(sh.select(col("doc_id").as("doc_a"), col("h")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
@@ -1745,13 +1779,16 @@ object Dedup {
     * construction (the same regime split [[containmentPairs]]
     * documents), which is what keeps the audit linear-ish at corpus
     * scale — every join here is either bucket-bounded or banded.
+    *
+    * The audited geometry is k permutations of family `perm` in
+    * `bands` bands: the fixed [[permuted]] table (k ≤ 8, q253) or
+    * [[permutedAffine]] at a contract width (q255's (3, 10)). The
+    * text collapse, the blocked truth and the recall tail are the ones
+    * [[simhashRecallAudit]] uses.
     */
   def lshRecallAudit(docs: DataFrame, idCol: String, textCol: String,
       maxDf: Int = 5, k: Int = 8, bands: Int = 2,
-      floorMicro: Long = 300000L, affine: Boolean = false): DataFrame = {
-    require(affine || k <= MinhashA.length,
-      s"k=$k exceeds the fixed permutation table (${MinhashA.length}): pass affine=true " +
-        "for wider geometries (the index-generated family supports any k)")
+      floorMicro: Long = 300000L, perm: Permutation = permuted): DataFrame = {
     // Collapse identical shingle-SET classes to one representative and
     // carry the multiplicity — the q72 saturation lesson applied to the
     // audit itself (a replica-heavy corpus turns the band join into
@@ -1764,20 +1801,11 @@ object Dedup {
     // the bucket-10 row without joining at all. Rarity (df ∈ [2,
     // maxDf]) is counted across CLASSES, so exact copies cannot turn a
     // discriminative shingle into "boilerplate".
-    // two-stage collapse: identical TEXT first (one cheap string
-    // shuffle collapses replica mass before any shingling — at the
-    // x100 soak tier this is the difference between shingling 45M
-    // chunks and shingling 450k representatives), then identical SET
-    // (the rare permuted-token remainder). Text groups partition each
-    // set class, so summed multiplicities and min-of-min reps are
-    // exactly the one-stage result.
-    // cached: texts feeds BOTH the shingling and the multiplicity join
-    // below — uncached, the class-cache fill job would run the chunk
-    // build + text collapse twice (the dominant x100 cost)
-    val texts = graft.GraftCache.registered(docs
-      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("txt"))
-      .groupBy(col("txt"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("mt")))
+    // two-stage collapse: identical TEXT first ([[collapseTexts]]),
+    // then identical SET (the rare permuted-token remainder). Text
+    // groups partition each set class, so summed multiplicities and
+    // min-of-min reps are exactly the one-stage result.
+    val texts = collapseTexts(docs, idCol, textCol)
     // hs as array<int> (lossless for the 31-bit hash, same sort order):
     // §2.3 — the audit's dominant x100 stage is attaching hs_a/hs_b to
     // ~148M truth-candidate pairs through two exchanges (stage-break in
@@ -1789,28 +1817,23 @@ object Dedup {
     val classes = graft.GraftCache.registered(
       shingleHashes(texts, "doc_id", "txt").distinct()
         .groupBy(col("doc_id"))
-        .agg(sort_array(collect_set(col("h").cast("int"))).as("hs"))
-        .join(texts.select(col("doc_id"), col("mt")), "doc_id")
+        .agg(intHashSet)
+        .join(texts.select(col("doc_id"), col("m")), "doc_id")
         .groupBy(col("hs"))
-        .agg(min(col("doc_id")).as("doc_id"), sum(col("mt")).as("m")))
+        .agg(min(col("doc_id")).as("doc_id"), sum(col("m")).as("m")))
     val sh = graft.GraftCache.registered(
       classes.select(col("doc_id"), explode(col("hs")).as("h")))
-    val rare = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .select(col("h"))
-    val blocked = sh.join(rare, "h")
-    requireBoundedBlocks(blocked, Seq(col("h")),
-      s"a smaller maxDf (currently $maxDf: rare-shingle blocking saturates when maxDf admits boilerplate shingles)")
+    // built before the blocking guard's job, so a family that cannot
+    // reach width k fails at once
+    val sigs = signaturesFromHashes(sh, k, perm)
     // persisted for the same reason as [[simhashRecallAudit]]'s truth
     // pairs: cache-isolate the TRUTH stage (blocked self-join +
     // distinct) from the banding probe, so a warm re-run rides the
     // materialized pair set instead of re-running the self-join inside
     // the same plan that probes bands. Bounded by requireBoundedBlocks.
-    val cand = graft.GraftCache.registered(
-      blocked.as("l").join(blocked.as("r"),
-          col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id"))
-        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-        .distinct())
+    val cand = graft.GraftCache.registered(rareShingleBlockedPairs(sh, maxDf))
+    val caught = minhashCandidates(sigs, k, bands)
+      .withColumn("caught", lit(1L))
     val truth = scoredCandidates(cand, classes.select(col("doc_id"), col("hs")))
       .select(col("doc_a"), col("doc_b"),
         expr("(cast(inter as bigint) * 1000000) div " +
@@ -1818,27 +1841,9 @@ object Dedup {
       .filter(col("jac_micro") >= floorMicro)
       .join(classes.select(col("doc_id").as("doc_a"), col("m").as("m_a")), "doc_a")
       .join(classes.select(col("doc_id").as("doc_b"), col("m").as("m_b")), "doc_b")
-    val sigs = if (affine) signaturesFromHashesAffine(sh, k)
-      else signaturesFromHashes(sh, k)
-    val caught = minhashCandidates(sigs, k, bands)
-      .withColumn("caught", lit(1L))
-    // recall numerator in DECIMAL(38,0): weighted pair counts reach
-    // ~1e13 on replica corpora, so × 1e6 would wrap a long (the q243
-    // sMAPE precedent); div on decimals floors exactly like // does
-    val cross = truth.join(caught, Seq("doc_a", "doc_b"), "left_outer")
-      .groupBy(expr("cast(jac_micro div 100000 as int)").as("j_bucket"))
-      .agg(sum(expr("m_a * m_b")).as("n_truth"),
-        sum(expr("m_a * m_b * coalesce(caught, 0L)")).as("n_caught"))
-    val within = classes.filter(col("m") >= 2)
-      .agg(sum(expr("m * (m - 1) div 2")).as("n_truth"))
-      .filter(col("n_truth") > 0)
-      .select(lit(10).as("j_bucket"), col("n_truth"),
-        col("n_truth").as("n_caught"))
-    cross.unionByName(within)
-      .groupBy(col("j_bucket"))
-      .agg(sum(col("n_truth")).as("n_truth"), sum(col("n_caught")).as("n_caught"))
-      .withColumn("recall_micro",
-        expr("cast((cast(n_caught as decimal(38,0)) * 1000000) div n_truth as bigint)"))
-      .orderBy(col("j_bucket"))
+      .join(caught, Seq("doc_a", "doc_b"), "left_outer")
+      .select(expr("cast(jac_micro div 100000 as int)").as("j_bucket"), col("m_a"), col("m_b"),
+        coalesce(col("caught"), lit(0L)).as("caught"))
+    recallCurve(truth, classes, "j_bucket", 10)
   }
 }

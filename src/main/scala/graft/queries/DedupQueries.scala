@@ -139,7 +139,8 @@ object DedupQueries {
       s"SELECT doc_id, ${sqlH31("shingle")} AS h FROM (${sqlShingles(src)})", threshold, 2)
 
   /** Pair-derivation CTE chain at an ARBITRARY affine geometry —
-    * mirrors [[graft.operators.Dedup.pairsFromHashesAffine]]: k = r·b
+    * mirrors [[graft.operators.Dedup.pairsFromHashes]] with the
+    * [[graft.operators.Dedup.permutedAffine]] family: k = r·b
     * index-generated permutations, b bands of r rows.
     */
   private[queries] def sqlPairsCtesFromHashesAffine(hashSql: String, threshold: Double,
@@ -588,7 +589,7 @@ object DedupQueries {
       Dedup.lshRecallAudit(
         Dedup.slidingTokenChunks(t(s, dir, "documents"), "doc_id", "text"),
         "chunk_id", "chunk_text", maxDf = 20, k = r * b, bands = b,
-        affine = true)
+        perm = Dedup.permutedAffine)
     }),
 
     // contract-derived near-dup pairs: the geometry comes from the
@@ -602,8 +603,9 @@ object DedupQueries {
     // uncandidated; (3, 10) leaves ~2e-4%).
     "q254_contract_neardup" -> ((s, dir) => {
       val (r, b) = Dedup.minhashGeometryFor(600000L, 900000L)
-      Dedup.pairsFromHashesAffine(
-        Dedup.shingleHashes(t(s, dir, "documents"), "doc_id", "text"), r, b, 0.6)
+      Dedup.pairsFromHashes(
+        Dedup.shingleHashes(t(s, dir, "documents"), "doc_id", "text"), r * b, b, 0.6,
+        Dedup.permutedAffine)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 

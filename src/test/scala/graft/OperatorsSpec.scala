@@ -42,6 +42,42 @@ class OperatorsSpec extends SparkSpec {
     assert(pairs.exists(p => p._1 == 0L && p._2 == 1L))
   }
 
+  test("the fixed permutation table refuses k > 8 at plan build, naming the affine family") {
+    val dir = graft.queries.Q.tempDir("graft_k9_index")
+    def refusal(body: => Any): String = intercept[IllegalArgumentException](body).getMessage
+    val msgs = Seq(
+      refusal(Dedup.minhashPairs(docsDf, "doc_id", "text", k = 9)),
+      refusal(Dedup.minhashSignatures(docsDf, "doc_id", "text", k = 9)),
+      refusal(Dedup.writeDedupIndex(docsDf, "doc_id", "text", dir, k = 9)),
+      refusal(Dedup.dedupAgainstIndex(docsDf, "doc_id", "text", dir, k = 9)),
+      refusal(Dedup.lshRecallAudit(docsDf, "doc_id", "text", k = 9)))
+    msgs.foreach { m =>
+      assert(m.contains("permutation 8 is past the fixed table") && m.contains("permutedAffine") &&
+        m.contains("minhashPairsContract"), m)
+    }
+    // the writer refused before writing any index table
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() === 0L)
+    graft.GraftCache.releaseAll()
+  }
+
+  test("minhashCandidates persists the banded frame from 8 bands up (both sides of the switch)") {
+    val sh = Dedup.shingleHashes(docsDf, "doc_id", "text")
+    // frames the pair core registers: the signature/set aggregate, plus
+    // the banded frame once bands reach the constant
+    def persisted(pairs: => org.apache.spark.sql.DataFrame): Int = {
+      val before = graft.GraftCache.pendingCount
+      val df = pairs
+      val n = graft.GraftCache.pendingCount - before
+      assert(df.collect().exists(r => r.getLong(0) == 0L && r.getLong(1) == 3L)) // the exact dup
+      graft.GraftCache.releaseAll()
+      n
+    }
+    assert(persisted(Dedup.pairsFromHashes(sh, 8, 2, 0.5)) === 1)
+    assert(persisted(Dedup.pairsFromHashes(sh, 7, 7, 0.5)) === 1)
+    assert(persisted(Dedup.pairsFromHashes(sh, 8, 8, 0.5)) === 2)
+    assert(persisted(Dedup.pairsFromHashes(sh, 20, 10, 0.5, Dedup.permutedAffine)) === 2)
+  }
+
   test("lshRecallAudit: exact dups always caught, recall bounded, buckets respect the floor") {
     // docs 0 == 3 (J = 1.0, bucket 10): identical shingle sets give
     // identical signatures, so the banding MUST catch them — the one
@@ -109,7 +145,7 @@ class OperatorsSpec extends SparkSpec {
   test("contract geometry (3,10) catches the J=0.75 pair and the exact dup") {
     val sh = Dedup.shingleHashes(docsDf, "doc_id", "text")
     val (r, b) = Dedup.minhashGeometryFor(600000L, 900000L)
-    val contract = Dedup.pairsFromHashesAffine(sh, r, b, 0.5).collect()
+    val contract = Dedup.pairsFromHashes(sh, r * b, b, 0.5, Dedup.permutedAffine).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     // docs 0~1 share 6/8 shingles (J = 0.75): the (3,10) curve catches
     // it with p = 0.996 (deterministic here — hashes are fixed);
@@ -128,7 +164,7 @@ class OperatorsSpec extends SparkSpec {
     val chunks = Dedup.slidingTokenChunks(df, "doc_id", "text", w = 32, stride = 6)
     val (r, b) = Dedup.minhashGeometryFor(600000L, 900000L)
     val contract = Dedup.lshRecallAudit(chunks, "chunk_id", "chunk_text",
-      maxDf = 20, k = r * b, bands = b, affine = true).collect()
+      maxDf = 20, k = r * b, bands = b, perm = Dedup.permutedAffine).collect()
       .map(x => x.getAs[Int]("j_bucket") -> x.getAs[Long]("recall_micro")).toMap
     // the graded contract row: >= 900000 micro at J in [0.6, 0.7)
     assert(contract.contains(6), s"no bucket-6 stratum: ${contract.keySet}")
@@ -163,7 +199,7 @@ class OperatorsSpec extends SparkSpec {
     val contract = Dedup.lshRecallAudit(
       Dedup.slidingTokenChunks(df, "doc_id", "text"),
       "chunk_id", "chunk_text", maxDf = 20, k = r * b, bands = b,
-      affine = true).collect()
+      perm = Dedup.permutedAffine).collect()
     val defByB = audit.map(x => x.getAs[Int]("j_bucket") ->
       (x.getAs[Long]("n_truth"), x.getAs[Long]("n_caught"))).toMap
     val conByB = contract.map(x => x.getAs[Int]("j_bucket") ->

@@ -449,4 +449,330 @@ class PropertiesSpec extends SparkSpec {
       assert(java.nio.file.Files.isDirectory(p) && p.getFileName.toString.startsWith("graft_tmp_q"))
     }
   }
+
+  /** The dedup pair pipelines, index writers and recall audits as they
+    * stood before the shared signature aggregate, pair core, blocking
+    * and recall tail, inlined so the laws below pin the merged forms.
+    */
+  private object OldDedup {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions._
+    import graft.functions.TextFunctions.fingerprint
+    import graft.plans.SortedIntersectCount.sorted_intersect_count
+
+    def scoredCandidates(cand: DataFrame, sets: DataFrame): DataFrame =
+      cand
+        .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
+        .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
+        .select(col("doc_a"), col("doc_b"),
+          sorted_intersect_count(col("hs_a"), col("hs_b")).as("inter"),
+          size(col("hs_a")).as("na"), size(col("hs_b")).as("nb"))
+
+    def verifyCandidatesWithSets(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
+      scoredCandidates(cand, sets)
+        .select(col("doc_a"), col("doc_b"),
+          round(col("inter").cast("double") /
+            (col("na") + col("nb") - col("inter")).cast("double"), 6).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
+
+    def pairsFromHashes(sh: DataFrame, k: Int, bands: Int, threshold: Double): DataFrame = {
+      val sigSets = GraftCache.registered(sh.groupBy(col("doc_id"))
+        .agg(min(Dedup.permuted(col("h"), 0)).as("mh0"),
+          (1 until k).map(i => min(Dedup.permuted(col("h"), i)).as(s"mh$i")) :+
+            sort_array(collect_set(col("h").cast("int"))).as("hs"): _*))
+      verifyCandidatesWithSets(Dedup.minhashCandidates(sigSets, k, bands),
+        sigSets.select(col("doc_id"), col("hs")), threshold)
+    }
+
+    def sigSetsAffine(sh: DataFrame, k: Int): DataFrame =
+      sh.groupBy(col("doc_id"))
+        .agg(min(Dedup.permutedAffine(col("h"), 0)).as("mh0"),
+          (1 until k).map(i => min(Dedup.permutedAffine(col("h"), i)).as(s"mh$i")) :+
+            sort_array(collect_set(col("h"))).as("hs"): _*)
+
+    def pairsFromHashesAffine(sh: DataFrame, rows: Int, bands: Int, threshold: Double): DataFrame = {
+      val k = rows * bands
+      val sigSets = GraftCache.registered(sigSetsAffine(sh, k))
+      verifyCandidatesWithSets(Dedup.minhashCandidates(sigSets, k, bands),
+        sigSets.select(col("doc_id"), col("hs")), threshold)
+    }
+
+    def writeDedupIndex(corpus: DataFrame, idCol: String, textCol: String, path: String,
+        k: Int = 8, bands: Int = 2): Unit = {
+      val sigSets = GraftCache.registered(
+        Dedup.shingleHashes(corpus, idCol, textCol).groupBy(col("doc_id"))
+          .agg(min(Dedup.permuted(col("h"), 0)).as("mh0"),
+            (1 until k).map(i => min(Dedup.permuted(col("h"), i)).as(s"mh$i")) :+
+              sort_array(collect_set(col("h"))).as("hs"): _*))
+      corpus.select(fingerprint(col(textCol)).as("fp")).distinct()
+        .write.mode("overwrite").parquet(s"$path/fingerprints")
+      Dedup.bandKeys(sigSets, k, bands)
+        .write.mode("overwrite").parquet(s"$path/bands")
+      sigSets.select(col("doc_id"), col("hs"))
+        .write.mode("overwrite").parquet(s"$path/sets")
+    }
+
+    def writeDedupIndexContract(corpus: DataFrame, idCol: String, textCol: String,
+        path: String, threshold: Double = 0.6): Unit = {
+      val thresholdMicro = math.round(threshold * 1000000L)
+      val (r, b) = Dedup.minhashGeometryFor(thresholdMicro, 900000L)
+      val k = r * b
+      val sigSets = GraftCache.registered(
+        sigSetsAffine(Dedup.shingleHashes(corpus, idCol, textCol), k))
+      corpus.select(fingerprint(col(textCol)).as("fp")).distinct()
+        .write.mode("overwrite").parquet(s"$path/fingerprints")
+      Dedup.bandKeys(sigSets, k, b)
+        .write.mode("overwrite").parquet(s"$path/bands")
+      sigSets.select(col("doc_id"), col("hs"))
+        .write.mode("overwrite").parquet(s"$path/sets")
+      Seq((r, b, thresholdMicro))
+        .toDF("rows", "bands", "threshold_micro")
+        .write.mode("overwrite").parquet(s"$path/_geometry")
+    }
+
+    def rareShingleBlocking(sh: DataFrame, maxDf: Int): DataFrame = {
+      val rare = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .filter(col("df").between(2, maxDf))
+        .select(col("h"))
+      val blocked = sh.join(rare, "h")
+      Dedup.requireBoundedBlocks(blocked, Seq(col("h")),
+        s"a smaller maxDf (currently $maxDf: rare-shingle blocking saturates when maxDf admits boilerplate shingles)")
+      blocked.as("l").join(blocked.as("r"),
+          col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id"))
+        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+        .distinct()
+    }
+
+    def simhashRecallAudit(docs: DataFrame, idCol: String, textCol: String,
+        bits: Int = 32, bands: Int = 4, maxDf: Int = 5,
+        maxHammingAudit: Int = 12): DataFrame = {
+      val bandBits = bits / bands
+      val texts = GraftCache.registered(docs
+        .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("txt"))
+        .groupBy(col("txt"))
+        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("m")))
+      val sh = GraftCache.registered(
+        Dedup.shingleHashes(texts, "doc_id", "txt").distinct())
+      val rare = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .filter(col("df").between(2, maxDf))
+        .select(col("h"))
+      val blocked = sh.join(rare, "h")
+      Dedup.requireBoundedBlocks(blocked, Seq(col("h")),
+        s"a smaller maxDf (currently $maxDf: rare-shingle blocking saturates when maxDf " +
+          "admits boilerplate shingles)")
+      val cand = GraftCache.registered(
+        blocked.as("l").join(blocked.as("r"),
+            col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id"))
+          .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+          .distinct())
+      val sig = GraftCache.registered(
+        Dedup.simhash(texts, "doc_id", "txt", bits)
+          .join(texts.select(col("doc_id"), col("m")), "doc_id"))
+      val bandAgree = (0 until bands).map { b =>
+        expr(s"(sh_a >> ${b * bandBits}) % ${1L << bandBits}") ===
+          expr(s"(sh_b >> ${b * bandBits}) % ${1L << bandBits}")
+      }.reduce(_ || _)
+      val cross = cand
+        .join(sig.select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"),
+          col("m").as("m_a")), "doc_a")
+        .join(sig.select(col("doc_id").as("doc_b"), col("simhash").as("sh_b"),
+          col("m").as("m_b")), "doc_b")
+        .withColumn("hamming", expr("cast(bit_count(sh_a ^ sh_b) as int)"))
+        .filter(col("hamming") <= maxHammingAudit)
+        .withColumn("caught", when(bandAgree, 1L).otherwise(0L))
+        .groupBy(col("hamming").as("h_bucket"))
+        .agg(sum(expr("m_a * m_b")).as("n_truth"),
+          sum(expr("m_a * m_b * caught")).as("n_caught"))
+      val within = texts.filter(col("m") >= 2)
+        .agg(sum(expr("m * (m - 1) div 2")).as("n_truth"))
+        .filter(col("n_truth") > 0)
+        .select(lit(0).as("h_bucket"), col("n_truth"), col("n_truth").as("n_caught"))
+      cross.unionByName(within)
+        .groupBy(col("h_bucket"))
+        .agg(sum(col("n_truth")).as("n_truth"), sum(col("n_caught")).as("n_caught"))
+        .withColumn("recall_micro",
+          expr("cast((cast(n_caught as decimal(38,0)) * 1000000) div n_truth as bigint)"))
+        .orderBy(col("h_bucket"))
+    }
+
+    def lshRecallAudit(docs: DataFrame, idCol: String, textCol: String,
+        maxDf: Int = 5, k: Int = 8, bands: Int = 2,
+        floorMicro: Long = 300000L, affine: Boolean = false): DataFrame = {
+      require(affine || k <= Dedup.MinhashA.length)
+      val texts = GraftCache.registered(docs
+        .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("txt"))
+        .groupBy(col("txt"))
+        .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("mt")))
+      val classes = GraftCache.registered(
+        Dedup.shingleHashes(texts, "doc_id", "txt").distinct()
+          .groupBy(col("doc_id"))
+          .agg(sort_array(collect_set(col("h").cast("int"))).as("hs"))
+          .join(texts.select(col("doc_id"), col("mt")), "doc_id")
+          .groupBy(col("hs"))
+          .agg(min(col("doc_id")).as("doc_id"), sum(col("mt")).as("m")))
+      val sh = GraftCache.registered(
+        classes.select(col("doc_id"), explode(col("hs")).as("h")))
+      val rare = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .filter(col("df").between(2, maxDf))
+        .select(col("h"))
+      val blocked = sh.join(rare, "h")
+      Dedup.requireBoundedBlocks(blocked, Seq(col("h")),
+        s"a smaller maxDf (currently $maxDf: rare-shingle blocking saturates when maxDf admits boilerplate shingles)")
+      val cand = GraftCache.registered(
+        blocked.as("l").join(blocked.as("r"),
+            col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id"))
+          .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+          .distinct())
+      val truth = scoredCandidates(cand, classes.select(col("doc_id"), col("hs")))
+        .select(col("doc_a"), col("doc_b"),
+          expr("(cast(inter as bigint) * 1000000) div " +
+            "(cast(na as bigint) + cast(nb as bigint) - cast(inter as bigint))").as("jac_micro"))
+        .filter(col("jac_micro") >= floorMicro)
+        .join(classes.select(col("doc_id").as("doc_a"), col("m").as("m_a")), "doc_a")
+        .join(classes.select(col("doc_id").as("doc_b"), col("m").as("m_b")), "doc_b")
+      val perm: (Column, Int) => Column = if (affine) Dedup.permutedAffine else Dedup.permuted
+      val sigs = sh.groupBy(col("doc_id"))
+        .agg(min(perm(col("h"), 0)).as("mh0"),
+          (1 until k).map(i => min(perm(col("h"), i)).as(s"mh$i")): _*)
+      val caught = Dedup.minhashCandidates(sigs, k, bands)
+        .withColumn("caught", lit(1L))
+      val cross = truth.join(caught, Seq("doc_a", "doc_b"), "left_outer")
+        .groupBy(expr("cast(jac_micro div 100000 as int)").as("j_bucket"))
+        .agg(sum(expr("m_a * m_b")).as("n_truth"),
+          sum(expr("m_a * m_b * coalesce(caught, 0L)")).as("n_caught"))
+      val within = classes.filter(col("m") >= 2)
+        .agg(sum(expr("m * (m - 1) div 2")).as("n_truth"))
+        .filter(col("n_truth") > 0)
+        .select(lit(10).as("j_bucket"), col("n_truth"),
+          col("n_truth").as("n_caught"))
+      cross.unionByName(within)
+        .groupBy(col("j_bucket"))
+        .agg(sum(col("n_truth")).as("n_truth"), sum(col("n_caught")).as("n_caught"))
+        .withColumn("recall_micro",
+          expr("cast((cast(n_caught as decimal(38,0)) * 1000000) div n_truth as bigint)"))
+        .orderBy(col("j_bucket"))
+    }
+  }
+
+  /** sf0.001 documents plus near-dup variants (a tail appended) and
+    * exact copies, so every pair family and recall bucket is populated.
+    */
+  private def dedupLawDocs: org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val base = spark.read.parquet(s"$sf001/documents.parquet").select(col("doc_id"), col("text"))
+    base
+      .union(base.filter(col("doc_id") < 60)
+        .select((col("doc_id") + 10000L).as("doc_id"), concat(col("text"), lit(" and one more tail")).as("text")))
+      .union(base.filter(col("doc_id") < 20).select((col("doc_id") + 20000L).as("doc_id"), col("text")))
+  }
+
+  /** Replica-heavy corpus: 120 sf0.001 documents at 1–4 copies each,
+    * plus a variant of each with its first word dropped.
+    */
+  private def replicaDocs: org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val base = spark.read.parquet(s"$sf001/documents.parquet")
+      .filter(col("doc_id") < 120).select(col("doc_id"), col("text"))
+    (0 until 4).map(c => base.filter(col("doc_id") % 4 >= c)
+        .select((col("doc_id") + 1000L * c).as("doc_id"), col("text")))
+      .reduce(_ union _)
+      .union(base.select((col("doc_id") + 9000L).as("doc_id"),
+        regexp_replace(col("text"), "^\\S+\\s+", "").as("text")))
+  }
+
+  test("law: the merged MinHash pair core ≡ the old fixed and affine pair pipelines (both sides of the band cache, 1/3/16 partitions)") {
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for (parts <- Seq(1, 3, 16)) {
+      val sh = Dedup.shingleHashes(dedupLawDocs.repartition(parts), "doc_id", "text")
+      // the fixed table stops at 8 permutations, so its widest band
+      // count is 8 (one row per band), the first that persists bands
+      for ((k, bands) <- Seq((8, 2), (8, 8))) {
+        val got = rows(Dedup.pairsFromHashes(sh, k, bands, 0.5))
+        assert(got === rows(OldDedup.pairsFromHashes(sh, k, bands, 0.5)), s"k=$k bands=$bands parts=$parts")
+        assert((0L until 20L).forall(d => got.contains((d, d + 20000L, 1.0))), s"exact copies lost at bands=$bands")
+      }
+      for ((r, b) <- Seq((4, 2), (3, 10))) {
+        val got = rows(Dedup.pairsFromHashes(sh, r * b, b, 0.5, Dedup.permutedAffine))
+        assert(got === rows(OldDedup.pairsFromHashesAffine(sh, r, b, 0.5)), s"rows=$r bands=$b parts=$parts")
+        assert(got.exists(p => p._2 >= 10000L && p._2 < 20000L && p._3 < 1.0), "no near-dup pair verified")
+      }
+      GraftCache.releaseAll()
+    }
+  }
+
+  test("law: rareShingleBlockedPairs ≡ the inlined rare-shingle blocking, on both sides of the block guard") {
+    import org.apache.spark.sql.functions._
+    val key = "graft.block.maxBucket"
+    def failure(body: => Any): String = intercept[IllegalArgumentException](body).getMessage
+    // a sorted list, not a set: a pair emitted twice must show
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val sh = Dedup.shingleHashes(replicaDocs, "doc_id", "text").distinct().cache()
+    try {
+      for (maxDf <- Seq(2, 3, 5)) {
+        val got = pairs(Dedup.rareShingleBlockedPairs(sh, maxDf))
+        assert(got.nonEmpty && got === pairs(OldDedup.rareShingleBlocking(sh, maxDf)), s"maxDf=$maxDf")
+        // sh is distinct, so a rare shingle's block holds df rows: the
+        // guard's edge sits at the largest df admitted, here maxDf itself
+        val top = sh.groupBy(col("h")).count().filter(col("count").between(2, maxDf))
+          .agg(max(col("count"))).head.getLong(0)
+        assert(top === maxDf.toLong)
+        try {
+          spark.conf.set(key, top.toString)
+          assert(pairs(Dedup.rareShingleBlockedPairs(sh, maxDf)) === got)
+          assert(pairs(OldDedup.rareShingleBlocking(sh, maxDf)) === got)
+          spark.conf.set(key, (top - 1).toString)
+          val msg = failure(Dedup.rareShingleBlockedPairs(sh, maxDf))
+          assert(msg.contains(s"holds $top rows > $key=${top - 1}") && msg.contains(s"currently $maxDf"), msg)
+          assert(msg === failure(OldDedup.rareShingleBlocking(sh, maxDf)))
+        } finally spark.conf.unset(key)
+      }
+    } finally sh.unpersist()
+  }
+
+  test("law: lshRecallAudit (fixed and affine) and simhashRecallAudit ≡ their old bodies (sliding chunks, replica-heavy corpus)") {
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+    val chunks = Dedup.slidingTokenChunks(docs, "doc_id", "text")
+    val (r, b) = Dedup.minhashGeometryFor(600000L, 900000L)
+    for ((in, id, text) <- Seq((chunks, "chunk_id", "chunk_text"), (replicaDocs, "doc_id", "text"))) {
+      val fixed = Dedup.lshRecallAudit(in, id, text, maxDf = 20).collect().toSeq
+      assert(fixed === OldDedup.lshRecallAudit(in, id, text, maxDf = 20).collect().toSeq)
+      val affine = Dedup.lshRecallAudit(in, id, text, maxDf = 20, k = r * b, bands = b,
+        perm = Dedup.permutedAffine).collect().toSeq
+      assert(affine === OldDedup.lshRecallAudit(in, id, text, maxDf = 20, k = r * b, bands = b,
+        affine = true).collect().toSeq)
+      val simh = Dedup.simhashRecallAudit(in, id, text, bits = 32, bands = 4, maxDf = 20).collect().toSeq
+      assert(simh === OldDedup.simhashRecallAudit(in, id, text, bits = 32, bands = 4, maxDf = 20).collect().toSeq)
+      // every curve is populated, with the analytic within-class row
+      // wherever the input repeats a text
+      assert(fixed.size >= 3 && affine.size >= 3 && simh.size >= 3)
+      if (id == "doc_id") {
+        assert(fixed.exists(_.getAs[Int]("j_bucket") == 10) && simh.exists(_.getAs[Int]("h_bucket") == 0))
+      }
+      GraftCache.releaseAll()
+    }
+  }
+
+  test("law: the shared index writer ≡ the inlined writeDedupIndex / writeDedupIndexContract (sets stay array<bigint>)") {
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val dir = graft.queries.Q.tempDir("graft_index_law")
+    val corpus = dedupLawDocs
+    Dedup.writeDedupIndex(corpus, "doc_id", "text", s"$dir/fixed_new")
+    OldDedup.writeDedupIndex(corpus, "doc_id", "text", s"$dir/fixed_old")
+    Dedup.writeDedupIndexContract(corpus, "doc_id", "text", s"$dir/contract_new")
+    OldDedup.writeDedupIndexContract(corpus, "doc_id", "text", s"$dir/contract_old")
+    GraftCache.releaseAll()
+    for (kind <- Seq("fixed", "contract"); table <- Seq("fingerprints", "bands", "sets")) {
+      val got = spark.read.parquet(s"$dir/${kind}_new/$table")
+      val want = spark.read.parquet(s"$dir/${kind}_old/$table")
+      assert(got.schema === want.schema, s"$kind/$table")
+      assert(got.count() === want.count() && got.count() > 0, s"$kind/$table")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"$kind/$table")
+      if (table == "sets")
+        assert(got.schema("hs").dataType.asInstanceOf[ArrayType].elementType === LongType)
+    }
+    assert(spark.read.parquet(s"$dir/contract_new/_geometry").collect().toSeq ===
+      spark.read.parquet(s"$dir/contract_old/_geometry").collect().toSeq)
+  }
 }
