@@ -34,16 +34,16 @@ object Dedup {
     * planning the self-join; the LSH twins have no such cliff because
     * bucket cohabitation is bounded by similarity, not corpus size.
     * The check is one count aggregate over `blocks`, run as its own
-    * Spark job when called. Only some callers persist `blocks` first
+    * Spark job when called. Some callers persist `blocks` first
     * (`ngramJaccardPairs`' base, `nearDupByLshMulti`'s bands,
     * `semanticDedupCellsContract`'s cell assignment), so the self-join
-    * reads the guard's scan back;
+    * reads back what the guard's scan cached. The others do not:
     * `simhashPairs`' bands, the rare-shingle blocks of
     * [[rareShingleBlockedPairs]] (both recall audits and
     * [[containmentPairs]]), `nearDupExactBlocked`, `nearDupByLsh` and
-    * [[editDistancePairs]] are not persisted, so there the guard's scan
-    * is recomputed by the join (ROADMAP direction B: fold the check
-    * into the join's own materialization).
+    * [[editDistancePairs]]. There the guard's job is extra work and the
+    * join recomputes `blocks` (ROADMAP direction B: fold the check into
+    * the join's own materialization).
     */
   private[graft] def requireBoundedBlocks(blocks: DataFrame, keys: Seq[Column],
       lshAlternative: String): Unit = {
@@ -139,7 +139,7 @@ object Dedup {
     * expressions over the same base hash. The ONE signature aggregate:
     * the pair core appends its `array<int>` hash set
     * ([[intHashSet]]), the at-rest index writers and probers their
-    * `array<bigint>` one ([[longHashSet]]), so signatures and sets
+    * `array<bigint>` one ([[indexSigSets]]), so signatures and sets
     * come out of a single aggregation (the q51 lesson).
     */
   def signaturesFromHashes(sh: DataFrame, k: Int = 8, perm: Permutation = permuted,
@@ -155,12 +155,6 @@ object Dedup {
     * the verify joins' replication.
     */
   private def intHashSet: Column = sort_array(collect_set(col("h").cast("int"))).as("hs")
-
-  /** Sorted distinct hash set as `array<bigint>` — the at-rest dedup
-    * index's `sets/` format (ROADMAP item 5 narrows it behind a
-    * version).
-    */
-  private def longHashSet: Column = sort_array(collect_set(col("h"))).as("hs")
 
   /** MinHash signatures over 3-word shingles: doc_id, mh0..mh{k-1}. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String, k: Int = 8): DataFrame =
@@ -243,7 +237,7 @@ object Dedup {
   }
 
   /** Fewest bands at which [[minhashCandidates]] persists its banded frame. */
-  private[graft] val BandCacheMinBands = 8
+  private val BandCacheMinBands = 8
 
   /** Exact Jaccard over shingle sets for candidate pairs — the verify
     * step after LSH banding.
@@ -1475,14 +1469,15 @@ object Dedup {
   }
 
   /** The index's persisted signature/set aggregate: k mins of family
-    * `perm` plus the `array<bigint>` set — ONE definition for the
-    * writers and the probers, so an index written today always agrees
-    * with a batch signed tomorrow.
+    * `perm` plus the sorted hash set as `array<bigint>`, the at-rest
+    * `sets/` format (ROADMAP item 5 narrows it behind a version). ONE
+    * definition for the writers and the probers, so an index written
+    * today always agrees with a batch signed tomorrow.
     */
   private def indexSigSets(docs: DataFrame, idCol: String, textCol: String, k: Int,
       perm: Permutation): DataFrame =
-    graft.GraftCache.registered(
-      signaturesFromHashes(shingleHashes(docs, idCol, textCol), k, perm, Seq(longHashSet)))
+    graft.GraftCache.registered(signaturesFromHashes(shingleHashes(docs, idCol, textCol), k, perm,
+      Seq(sort_array(collect_set(col("h"))).as("hs"))))
 
   /** Incremental dedup of a new batch against a [[writeDedupIndex]]
     * index: per new doc, verdict `exact_dup` (fingerprint already in
