@@ -1,30 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
 object Bench {
+
+  /** The warm map of a BENCH.json snapshot: the numeric fields of its
+    * top-level "queries" object (empty when there is none). A tree read
+    * tolerates any layout: round 11's exact-literal split
+    * ("queries":{) returned zero entries on a pretty-printed splice and
+    * SILENTLY disabled the whole drift pass (the closing sweep committed
+    * q144 at 3.12s vs 1.13s isolated with "drift":[] asserting a clean
+    * pass it never ran).
+    */
+  def snapshotOf(json: String): Map[String, Double] =
+    new ObjectMapper().readTree(json).path("queries").properties.asScala
+      .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The status listeners retain up to 1000 SQL executions and their
-      // stage/task state even with the UI off; across a 200+ query
-      // sweep (600+ executions, thousands of stages) the single
-      // listener thread falls behind and the event bus fills, at which
-      // point EVENT PRODUCERS BLOCK inside query execution — measured
-      // as a flat ~0.3-1.5 s inflation on every late-sweep measurement
-      // (chaos-harness re-measures; host calibration stayed flat, heap
-      // and code-cache levers changed nothing). Keep retained state
-      // tiny so listener processing stays O(small) for the whole run.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder("graft-bench").getOrCreate()
     // Warm the JVM (codegen, shuffle, parquet reader paths).
     spark.read.parquet(s"$sfDir/region.parquet").repartition(4).groupBy("r_name").count().count()
     SparkEntry.entry(spark).count()
@@ -67,22 +62,22 @@ object Bench {
       }
       ((System.nanoTime() - t0) / 1e9, err)
     }
-    // Isolation is ON BY DEFAULT (SPARK_GRAFT_ISOLATE=0 opts out): a
-    // fresh SparkSession (new SQLConf/codegen-visible session state,
-    // shared context) and a full GC before each query, so heap pressure
-    // and session state from query N can't contaminate query N+1's
-    // timing. Round 6's driver sweep measured q67 at 19.1s where the
-    // isolated truth was 3.3s — with interference inflating BOTH cold
-    // and warm, so no inversion detector could catch it after the fact.
+    // Every query runs isolated: a fresh SparkSession (new
+    // SQLConf/codegen-visible session state, shared context) and a full
+    // GC before each query, so heap pressure and session state from
+    // query N can't contaminate query N+1's timing. Round 6's driver
+    // sweep measured q67 at 19.1s where the isolated truth was 3.3s —
+    // with interference inflating BOTH cold and warm, so no inversion
+    // detector could catch it after the fact.
     // The only reliable per-query number is an isolated one.
-    val isolate = !sys.env.get("SPARK_GRAFT_ISOLATE").contains("0")
     val qfns = SparkEntry.queries
     // One cold + one warm measurement (with GC-retry on inversion) of a
     // single query, in its own session. Used by the main loop and by
     // the drift re-measurement pass below.
     def measure(name: String): (Double, Double, Double, Option[String]) = {
       val fn = qfns(name)
-      val sess = if (isolate) { System.gc(); spark.newSession() } else spark
+      System.gc()
+      val sess = spark.newSession()
       val (cold, coldErr) = timed(fn(sess, sfDir).count())
       var (warm, warmErr) = timed(fn(sess, sfDir).count())
       // The FIRST warm measurement, before any GC-retry below — kept in
@@ -116,25 +111,12 @@ object Bench {
     // The COMMITTED snapshot (BENCH.json as it sits in the tree before
     // this run overwrites it) is the cross-run reference: a per-query
     // number that drifts far from it is re-measured before anyone
-    // trusts it. The warm map is the first "queries" object in the
-    // file, located with a WHITESPACE-TOLERANT regex: round 11's
-    // exact-literal split ("queries":{) returned zero entries on a
-    // pretty-printed splice and SILENTLY disabled the whole drift pass
-    // (the closing sweep committed q144 at 3.12s vs 1.13s isolated
-    // with "drift":[] asserting a clean pass it never ran). Key/value
-    // pairs inside the object tolerate spaces for the same reason.
-    val snapshotExists = java.nio.file.Files.exists(java.nio.file.Paths.get("BENCH.json"))
-    val snapshot: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("BENCH.json")), java.nio.charset.StandardCharsets.UTF_8)
-      "\"queries\"\\s*:\\s*\\{".r.findFirstMatchIn(txt) match {
-        case None => Map.empty
-        case Some(m) =>
-          "\"([^\"]+)\"\\s*:\\s*([-0-9.eE]+)".r
-            .findAllMatchIn(txt.substring(m.end).takeWhile(_ != '}'))
-            .map(g => g.group(1) -> g.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+    // trusts it.
+    val snapshotPath = java.nio.file.Paths.get("BENCH.json")
+    val snapshotExists = java.nio.file.Files.exists(snapshotPath)
+    val snapshot: Map[String, Double] =
+      try snapshotOf(java.nio.file.Files.readString(snapshotPath))
+      catch { case _: Throwable => Map.empty }
     // An existing BENCH.json that parses to ZERO entries means the
     // drift audit is about to run blind — refuse to let that happen
     // silently. Loud on stderr AND recorded in the output JSON
@@ -247,7 +229,7 @@ object Bench {
     val suspects = ok.collect { case (n, c, w, _, _) if w > 1.5 * c => "\"" + n + "\"" }
       .mkString("[", ",", "]")
     val drift = driftNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val tail = s""""cold_total":$coldTotal,"errors":$errs,"n_errors":$nErrors,"suspect":$suspects,"drift":$drift,"snapshot_entries":${snapshot.size},"isolate":$isolate,"calib_1t_ms":$calib1t,"calib_nt_ms":$calibNt,"calib_cores":$nCores,"mode":"warm=min(steady-state runs; re-measured after GC on warm>cold inversion; re-measured isolated on >2x snapshot drift) over non-errored queries; cold=first-run incl. codegen compile; calib=fixed 200M-iter xorshift per thread, 1 thread vs all cores — divide query secs by calib ratio before cross-round compares","sf":"$sfDir""""
+    val tail = s""""cold_total":$coldTotal,"errors":$errs,"n_errors":$nErrors,"suspect":$suspects,"drift":$drift,"snapshot_entries":${snapshot.size},"isolate":true,"calib_1t_ms":$calib1t,"calib_nt_ms":$calibNt,"calib_cores":$nCores,"mode":"warm=min(steady-state runs; re-measured after GC on warm>cold inversion; re-measured isolated on >2x snapshot drift) over non-errored queries; cold=first-run incl. codegen compile; calib=fixed 200M-iter xorshift per thread, 1 thread vs all cores — divide query secs by calib ratio before cross-round compares","sf":"$sfDir""""
     val json = s"""{"metric":"total","value":$warmTotal,"unit":"sec","queries":$warmQs,"queries_cold":$coldQs,"queries_warm_raw":$warmRawQs,$tail}"""
     // Full JSON (full-precision values + warm_raw + errors) goes to a
     // file; stdout gets the machine-readable line (totals + rounded

@@ -1,10 +1,20 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
-/** Scale-right execution defaults, shipped as code instead of env
-  * knobs — the round-6 soak finding
-  * (NOTES_r6 "Partition-sizing findings") turned into the default.
+/** The session policy of every graft main and of the test session, in
+  * one place ([[builder]]), plus the scale-right partition sizing that
+  * `ScaleSoak` alone applies on top of it ([[tuneFor]]).
+  *
+  * [[builder]] sets what each run shares: the master (`local[cpus]`
+  * unless `SparkConf` already names one), one shuffle partition per
+  * core, AQE on, UTC, no UI, small listener retention and WARN logging.
+  * `SPARK_GRAFT_CPUS` (default 4) is its only input.
+  *
+  * [[tuneFor]] turns the round-6 soak finding (NOTES_r6
+  * "Partition-sizing findings") into code. Only `ScaleSoak` calls it;
+  * the board, the oracle dump and the other mains run without it.
   *
   * What the 1000× rung measured: the pair pipelines' shingle
   * aggregations spill when the shuffle is statically sized for the
@@ -16,15 +26,14 @@ import org.apache.spark.sql.SparkSession
   * output partitioning stable), so downstream stages pay thousands of
   * tiny tasks (q87 warm 3.7 s → 29 s at 100×).
   *
-  * Both halves have public levers, applied together here:
+  * Both halves have public levers, which [[tuneFor]] applies together:
   *
   *  1. `spark.sql.adaptive.coalescePartitions.initialPartitionNum` is
-  *     sized from the INPUT BYTES actually being processed
-  *     ([[tuneFor]]): one shuffle partition per
-  *     [[TargetInputBytesPerPartition]] (4 MB) of compressed input,
-  *     floored at the cluster parallelism, capped at 4096. Big
-  *     inputs get enough partitions not to spill; small inputs keep
-  *     the core-count default.
+  *     sized from the INPUT BYTES actually being processed: one shuffle
+  *     partition per [[TargetInputBytesPerPartition]] (4 MB) of
+  *     compressed input, floored at the cluster parallelism, capped at
+  *     4096. Big inputs get enough partitions not to spill; small
+  *     inputs keep the core-count default.
   *  2. `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`
   *     lets AQE coalesce THROUGH the cache boundary, so persisted
   *     frames hold data-sized partitions instead of pinning the
@@ -39,6 +48,47 @@ import org.apache.spark.sql.SparkSession
   * than scheduling overhead, which only widens the win.
   */
 object GraftSession {
+
+  /** Local worker threads: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus(env: Map[String, String]): Int = env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+
+  /** A master already in `SparkConf` (`spark-submit --master`,
+    * `-Dspark.master`) wins over `local[cpus]`.
+    */
+  def masterFor(confMaster: Option[String], cpus: Int): String =
+    confMaster.getOrElse(s"local[$cpus]")
+
+  /** Everything [[builder]] sets for a session named `appName` on `n`
+    * local threads; `sysConf` supplies a master set outside the program.
+    */
+  def conf(appName: String, sysConf: SparkConf = new SparkConf(),
+      n: Int = cpus(sys.env)): SparkConf =
+    new SparkConf(loadDefaults = false).setAppName(appName)
+      .setMaster(masterFor(sysConf.getOption("spark.master"), n))
+      .set("spark.sql.shuffle.partitions", n.toString)
+      .set("spark.sql.adaptive.enabled", "true")
+      .set("spark.sql.session.timeZone", "UTC")
+      .set("spark.ui.enabled", "false")
+      // The status listeners retain up to 1000 SQL executions and their
+      // stage/task state even with the UI off; across a 200+ query
+      // sweep (600+ executions, thousands of stages) the single
+      // listener thread falls behind and the event bus fills, at which
+      // point EVENT PRODUCERS BLOCK inside query execution — measured
+      // as a flat ~0.3-1.5 s inflation on every late-sweep measurement
+      // (chaos-harness re-measures; host calibration stayed flat, heap
+      // and code-cache levers changed nothing). Keep retained state
+      // tiny so listener processing stays O(small) for the whole run.
+      .set("spark.sql.ui.retainedExecutions", "8")
+      .set("spark.ui.retainedJobs", "100")
+      .set("spark.ui.retainedStages", "100")
+      .set("spark.ui.retainedTasks", "2000")
+      .set("spark.log.level", "WARN")
+
+  /** The one session builder: callers add only their own settings and
+    * call `getOrCreate()`.
+    */
+  def builder(appName: String): SparkSession.Builder =
+    SparkSession.builder().config(conf(appName))
 
   /** One shuffle partition per this many bytes of compressed input.
     * Parquet→shuffle expansion (snappy decode ~3-5×, then the

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes `.explain("formatted")` output for named declared queries to
@@ -12,8 +11,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * checks plan claims against these files).
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query> [<query> ...]
-  * Session config mirrors Bench so the plans match what the bench runs
-  * (same AQE/shuffle-partition settings drive the same join choices).
+  * The session comes from [[GraftSession.builder]], as Bench's does, so
+  * the same AQE/shuffle-partition settings drive the same join choices.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,15 +21,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder("graft-plandump").getOrCreate()
     Files.createDirectories(outDir)
     val qfns = SparkEntry.queries
     names.foreach { name =>

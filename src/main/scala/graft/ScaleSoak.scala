@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * cross-replica names sit ≥ 2 edits apart (true fuzzy-pair counts
   * scale linearly) while names stay dictionary-sized.
   *
-  * Usage: sbt "runMain graft.ScaleSoak <factor> [srcDir] [outBase] [q1,q2,...] [mode]"
+  * Usage: SPARK_GRAFT_CPUS=16 sbt "runMain graft.ScaleSoak <factor> [srcDir] [outBase] [q1,q2,...] [mode]"
   * Writes the scaled tables under <outBase>/x<factor>/ (reused if
   * present), runs each soak query (optionally the comma-separated
   * subset) twice (cold, warm), prints one JSON line and appends it to
@@ -370,28 +370,7 @@ object ScaleSoak {
         soakQueries.filter(sel)
       }
     val materialize = args.lift(4).contains("materialize")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // Shuffle-partition override for partition-sizing experiments: the
-    // default (= cores) is right while partitions fit in memory, but at
-    // the top soak tiers a 16-way shuffle of 5M docs' shingles spills —
-    // the ladder measures the cost of both settings, the NOTES record
-    // the sizing rule.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // AQE initialPartitionNum: by default SIZED FROM THE INPUT via
-    // GraftSession.tuneFor (one partition per ~16 MB of parquet, floor
-    // = cores, cap 4096) together with cache-transparent AQE
-    // coalescing — the round-6 grid measured 512 initial partitions
-    // fixing the spill-bound shingle aggregations at the 1000x tier
-    // (q68 195 s -> 51 s) while the cache-boundary conf removes the
-    // tax that made high-initial configs regress cached pipelines
-    // (q87 warm 3.7 s -> 29 s at 100x). SPARK_GRAFT_INITPN overrides
-    // the computed value for sizing experiments.
-    val initPn = sys.env.get("SPARK_GRAFT_INITPN")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-soak")
       // Iterative queries pin (localCheckpoint) each superstep, which
       // makes the PREVIOUS superstep's shuffle files unreferenced —
       // but Spark's ContextCleaner only deletes them after a JVM GC,
@@ -404,7 +383,6 @@ object ScaleSoak {
       // cluster executor would see.
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val dir = if (factor == 1) srcDir else {
       val d = s"$outBase/x$factor"
@@ -412,11 +390,9 @@ object ScaleSoak {
       d
     }
 
+    // input-sized AQE partitioning, cache-transparent (NOTES_r6)
     val chosenPn = GraftSession.tuneFor(spark, dir)
-    initPn.foreach(v =>
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", v))
-    println(s"[soak] initialPartitionNum=${initPn.getOrElse(chosenPn.toString)} " +
-      s"(auto=$chosenPn, inputBytes=${GraftSession.pathBytes(dir)})")
+    println(s"[soak] initialPartitionNum=$chosenPn (inputBytes=${GraftSession.pathBytes(dir)})")
 
     // warm the JVM on an unrelated plan
     spark.read.parquet(s"$dir/documents.parquet").groupBy("lang").count().count()
@@ -460,7 +436,7 @@ object ScaleSoak {
     // measurements. SPARK_GRAFT_SOAK_VARIANT names the experiment
     // ("HEAD" = the committed tree this soak ran against).
     val variant = sys.env.getOrElse("SPARK_GRAFT_SOAK_VARIANT", "HEAD")
-    val json = s"""{"soak_factor":$factor,"src":"$srcDir","mode":"$mode","variant":"$variant","total_warm":$total,"cpus":$cpus,"queries":$qs,"queries_warm_first":$wfQs}"""
+    val json = s"""{"soak_factor":$factor,"src":"$srcDir","mode":"$mode","variant":"$variant","total_warm":$total,"cpus":${spark.sparkContext.defaultParallelism},"queries":$qs,"queries_warm_first":$wfQs}"""
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get("SOAK.json"),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Before/after measurement for the wedge-join skew lever
@@ -20,7 +19,7 @@ import org.apache.spark.sql.functions._
   * under a single join key (the one-task straggler); a max-id hub
   * would accidentally dodge the blowup by having no out-edges at all.
   *
-  * Usage: sbt "runMain graft.SkewBench [nNodes] [nBase] [stride]"
+  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.SkewBench [nNodes] [nBase] [stride]"
   * Prints one JSON line: naive (orientByDegree=false) vs adaptive
   * wall seconds and the wedge counts that explain them. Recorded in
   * NOTES_r11.md; re-run anywhere, the graph is a pure function of the
@@ -31,17 +30,11 @@ object SkewBench {
     val n = if (args.length > 0) args(0).toLong else 200000L
     val nBase = if (args.length > 1) args(1).toLong else 400000L
     val stride = if (args.length > 2) args(2).toLong else 10L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // NOTE: driver memory cannot be set from the builder once the
-      // local-mode JVM is running — launch with enough heap instead
-      // (sbt -J-Xmx12g, or spark-submit --driver-memory); the repo's
-      // sbt heap suffices for the documented (n, nBase, stride) sizes.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Driver memory cannot be set from the builder once the local-mode
+    // JVM is running — launch with enough heap instead (SPARK_DRIVER_MEM,
+    // or spark-submit --driver-memory); the repo's default heap suffices
+    // for the documented (n, nBase, stride) sizes.
+    val spark = GraftSession.builder("graft-skewbench").getOrCreate()
     val hub = n / 2
     val base = spark.range(nBase).select(
       pmod(col("id") * 7919L, lit(n)).as("a"),

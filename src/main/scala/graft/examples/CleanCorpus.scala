@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point for the end-to-end corpus-cleaning pipeline:
   *
   *   sbt "runMain graft.examples.CleanCorpus <documents.parquet> <outDir> [qualityMin] [jaccard]"
@@ -9,9 +7,10 @@ import org.apache.spark.sql.SparkSession
   * Reads a (doc_id, text, ...) parquet table, runs
   * [[CorpusPipeline.clean]] (quality gate → exact dedup → MinHash+LSH
   * near-dedup keeping cluster representatives) and writes the cleaned
-  * ids + metadata as parquet. Local settings mirror `graft.Bench`; on a
-  * cluster, submit the same main with the cluster master and the
-  * pipeline scales as described in [[CorpusPipeline]].
+  * ids + metadata as parquet. The session is [[graft.GraftSession]]'s,
+  * `local[SPARK_GRAFT_CPUS]` by default; on a cluster, submit the same
+  * main with `spark-submit --master <url>` and the pipeline scales as
+  * described in [[CorpusPipeline]].
   */
 object CleanCorpus {
   def main(args: Array[String]): Unit = {
@@ -20,14 +19,7 @@ object CleanCorpus {
     val (in, out) = (args(0), args(1))
     val qualityMin = if (args.length > 2) args(2).toDouble else 0.5
     val jaccard = if (args.length > 3) args(3).toDouble else 0.6
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder("graft-clean-corpus").getOrCreate()
     val docs = spark.read.parquet(in)
     val cleaned = CorpusPipeline.clean(docs, qualityMin, jaccard)
     cleaned.write.mode("overwrite").parquet(out)

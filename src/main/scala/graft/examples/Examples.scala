@@ -77,10 +77,7 @@ object Examples {
 object ExamplesMain {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse(sys.error("usage: ExamplesMain <textPath>"))
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder("graft-examples").getOrCreate()
     val out = java.nio.file.Files.createTempDirectory("graft_wc").toString
     Examples.wordCountTyped(spark, path).sinkTsv(s"$out/wc")
     println(s"[examples] wordcount sunk to $out/wc")

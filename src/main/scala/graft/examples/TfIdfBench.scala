@@ -1,7 +1,6 @@
 package graft.examples
 
 import java.io.{BufferedWriter, FileWriter}
-import org.apache.spark.sql.SparkSession
 
 /** Reproduction of the reference's benchmark design
   * (`/root/reference/benchmarks/run.sh`: 5.3 MB Shakespeare corpus
@@ -9,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * wall-clock timed). Zero-egress environment → deterministic seeded
   * corpus (FIXTURES.md §3) instead of the download; same byte scale.
   *
-  * Usage: `sbt "runMain graft.examples.TfIdfBench <targetMB> [cores]"`
+  * Usage: `SPARK_GRAFT_CPUS=<cores> sbt "runMain graft.examples.TfIdfBench <targetMB>"`
   * Prints one JSON line: corpus size, wordcount secs, tf-idf secs,
   * MB/s for each.
   */
@@ -45,17 +44,14 @@ object TfIdfBench {
 
   def main(args: Array[String]): Unit = {
     val mb = args.headOption.map(_.toInt).getOrElse(100)
-    val cores = args.lift(1).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val dir = java.nio.file.Files.createTempDirectory("graft_tfidf").toString
     val corpus = s"$dir/corpus.txt"
     val t0 = System.nanoTime()
     val bytes = generateCorpus(corpus, mb.toLong << 20)
     val genSec = (System.nanoTime() - t0) / 1e9
 
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder("graft-tfidf").getOrCreate()
+    val cores = spark.sparkContext.defaultParallelism
     def time(f: => Long): (Double, Long) = {
       val t = System.nanoTime(); val n = f; ((System.nanoTime() - t) / 1e9, n)
     }

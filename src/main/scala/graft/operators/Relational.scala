@@ -126,8 +126,9 @@ object Relational {
     * exactly one salt bucket).
     *
     * When to reach for this at 100 TB: AQE's skew-join handles
-    * sort-merge skew by splitting oversized partitions at runtime, and
-    * [[graft.GraftSession]] enables it — prefer that for plain joins.
+    * sort-merge skew by splitting oversized partitions at runtime, on by
+    * default in Spark 4 (not a [[graft.GraftSession]] setting) — prefer
+    * that for plain joins.
     * Explicit salting is the remaining lever when the skewed side must
     * ALSO feed a hash-partitioned downstream op on the same key (AQE
     * splits would be re-merged by the reuse), when the join is
@@ -318,7 +319,8 @@ object Relational {
     * to broadcast-join outright.
     *
     * Spark's own runtime bloom join (`spark.sql.optimizer.runtime.
-    * bloomFilter.enabled`, on in [[graft.GraftSession]]) covers the
+    * bloomFilter.enabled`, a Spark 4 default that [[graft.GraftSession]]
+    * leaves alone) covers the
     * planner-visible case; reach for the explicit form when the small
     * side comes from a computation Catalyst can't see through (an
     * at-rest index, a collected driver artifact) or the filter should

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -460,8 +461,7 @@ object Similarity {
       struct(u.as("u"), norm(u).as("nrm"),
         graft.plans.HyperplaneBuckets.buckets(u, allW, dim, planes, tables).as("bks"))
     }
-    // The barrier's storage level is SIZE-ADAPTIVE (threshold
-    // conf-parameterized, scale-dependent setting per the round rules):
+    // The barrier's storage level is SIZE-ADAPTIVE ([[unitsLevel]]):
     // the frame is written once and read twice (cold materialization +
     // the warm re-run), and at the x1000 soak tier it is ~24 GB —
     // MEMORY_AND_DISK at that size squats on the unified region's
@@ -469,16 +469,11 @@ object Similarity {
     // the x1000 run died with UNABLE_TO_ACQUIRE_MEMORY at the default
     // 12g heap), while DISK_ONLY at the gate SF costs ~2x warm for no
     // benefit (0.97 vs 0.54 s — the 75 MB frame belongs in memory).
-    // The estimate is the input scan's stats times the 8-rung fan-out;
-    // measured split points: sf0.1 ≈ 6 MB est → memory (warm 0.54),
-    // x100 ≈ 0.4 GB est → memory (warm 1.73, no OOM), x1000 ≈ 4.3 GB
-    // est → disk (warm 19.5 vs the r13 join form's 31.5, no OOM).
-    // A wrong level can only cost time, never correctness.
-    val memMax = emb.sparkSession.conf
-      .get("graft.audit.unitsMemMaxBytes", String.valueOf(1L << 30)).toLong
-    val unitsEst = emb.queryExecution.optimizedPlan.stats.sizeInBytes * 8
-    val level = if (unitsEst > memMax) org.apache.spark.storage.StorageLevel.DISK_ONLY
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // The estimate is the input scan's stats times the 8-rung fan-out.
+    val sc = emb.sparkSession.sparkContext
+    val level = unitsLevel(emb.queryExecution.optimizedPlan.stats.sizeInBytes * 8,
+      sc.getExecutorMemoryStatus.values.map(_._1),
+      sc.getConf.getDouble("spark.memory.storageFraction", 0.5))
     val grouped = graft.GraftCache.registered(
       base.select(col("vec_id"), array(unitStructs: _*).as("us")), level)
     // 28 (j < k) rung pairs, computed map-side over the cached row —
@@ -503,6 +498,21 @@ object Similarity {
       .withColumn("recall_micro", expr("(n_caught * 1000000) div n_truth"))
       .orderBy(col("c_bucket"))
   }
+
+  /** Storage level of the q258/q259 unit barrier: memory while the
+    * estimate fits the protected storage share (`storageFraction`) of
+    * the smallest executor's unified memory (`executorMaxMem`, as
+    * `SparkContext.getExecutorMemoryStatus` reports it), disk above.
+    * Measured split points: sf0.1 ≈ 6 MB est → memory (warm 0.54),
+    * x100 ≈ 0.4 GB est at a 12 GB heap → memory (warm 1.73, no OOM),
+    * x1000 ≈ 4.3 GB est → disk (warm 19.5 vs the r13 join form's 31.5,
+    * no OOM). A wrong level can only cost time, never correctness.
+    */
+  def unitsLevel(unitsEst: BigInt, executorMaxMem: Iterable[Long],
+      storageFraction: Double): StorageLevel =
+    if (BigDecimal(unitsEst) > BigDecimal(executorMaxMem.min) * storageFraction)
+      StorageLevel.DISK_ONLY
+    else StorageLevel.MEMORY_AND_DISK
 
   /** Driver-side squared distance, quantized to 9 decimals — the same
     * rounding [[assignCells]] applies distributed-side, so probe

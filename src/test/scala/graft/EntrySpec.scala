@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Smoke: the driver contract itself — entry returns rows, every
   * declared query runs at sf0.001, and every oracle key has a query.
   */
@@ -24,6 +26,20 @@ class EntrySpec extends SparkSpec {
     assert(missing.isEmpty,
       s"queries missing from README.md Query index (run " +
         s"scripts/gen_query_index.py): ${missing.toSeq.sorted.mkString(", ")}")
+    // each row's `queries/<file>:<line>` is the first `"key" ->` line of
+    // that file: the query's definition, which precedes its oracle row
+    val row = """\| (q\w+) \| `queries/(\w+\.scala):(\d+)` \|""".r
+    val rows = readme.linesIterator.flatMap(row.findPrefixMatchOf(_)).toSeq
+    assert(rows.size === SparkEntry.queries.size)
+    val lines = rows.map(_.group(2)).distinct.map(f => f -> java.nio.file.Files
+      .readAllLines(java.nio.file.Paths.get(s"src/main/scala/graft/queries/$f")).asScala).toMap
+    val drifted = rows.flatMap { m =>
+      val (key, file, at) = (m.group(1), m.group(2), m.group(3).toInt)
+      val defined = lines(file).indexWhere(_.trim.startsWith(s""""$key" ->""")) + 1
+      if (defined == at) None else Some(s"$key: index says $file:$at, defined at $defined")
+    }
+    assert(drifted.isEmpty, "README.md Query index has drifted (run " +
+      "scripts/gen_query_index.py):\n" + drifted.mkString("\n"))
   }
 
   test("every query executes at sf0.001") {

@@ -2,13 +2,50 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The shipped partition-sizing defaults (NOTES_r6 findings as code):
-  * the sizing rule itself, and the cache-boundary behavior the rule
-  * depends on — with `canChangeCachedPlanOutputPartitioning` set, a
+/** The one session builder (its settings, its master choice, its cpus
+  * default) and `tuneFor`'s partition sizing (NOTES_r6 findings as
+  * code): the sizing rule itself, and the cache-boundary behavior the
+  * rule depends on — with `canChangeCachedPlanOutputPartitioning` set, a
   * persisted frame's partitioning is AQE-coalesced instead of pinning
   * the initial partition count through the cache.
   */
 class GraftSessionSpec extends SparkSpec {
+
+  // Reads confs only: no second SparkContext, no job.
+  test("builder applies the shared settings; the test session is built by it") {
+    import GraftSession._
+    val none = new org.apache.spark.SparkConf(loadDefaults = false)
+    val shared = Map(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.ui.retainedExecutions" -> "8",
+      "spark.ui.retainedJobs" -> "100",
+      "spark.ui.retainedStages" -> "100",
+      "spark.ui.retainedTasks" -> "2000",
+      "spark.log.level" -> "WARN")
+    assert(conf("graft-x", none, 7).getAll.toMap === shared ++ Map(
+      "spark.app.name" -> "graft-x",
+      "spark.master" -> "local[7]",
+      "spark.sql.shuffle.partitions" -> "7"))
+    val n = cpus(sys.env)
+    val live = spark.sparkContext.getConf
+    (shared ++ Map("spark.app.name" -> "graft-test", "spark.master" -> s"local[$n]",
+      "spark.sql.shuffle.partitions" -> n.toString)).foreach { case (k, v) =>
+      assert(live.get(k) === v, k)
+    }
+    assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel.toString === "WARN")
+  }
+
+  test("builder: a master already in SparkConf wins over local[cpus]; cpus default 4") {
+    import GraftSession._
+    assert(masterFor(None, 6) === "local[6]")
+    assert(masterFor(Some("spark://head:7077"), 6) === "spark://head:7077")
+    val submitted = new org.apache.spark.SparkConf(loadDefaults = false).setMaster("yarn")
+    assert(conf("graft-x", submitted).get("spark.master") === "yarn")
+    assert(cpus(Map.empty) === 4)
+    assert(cpus(Map("SPARK_GRAFT_CPUS" -> "16")) === 16)
+  }
 
   test("initialPartitionsFor clamps between parallelism and the cap") {
     import GraftSession.initialPartitionsFor

@@ -1080,6 +1080,28 @@ class OperatorsSpec extends SparkSpec {
     assert(got === ref)
   }
 
+  test("unitsLevel: the q258 barrier stays in memory below the protected storage share, on disk above") {
+    import org.apache.spark.storage.StorageLevel.{DISK_ONLY, MEMORY_AND_DISK}
+    // unified memory of a heap, as Spark's UnifiedMemoryManager sizes
+    // it: (heap - 300 MB reserved) * spark.memory.fraction 0.6
+    def unified(heap: Long): Long = ((heap - (300L << 20)) * 0.6).toLong
+    val (gb4, gb12) = (unified(4L << 30), unified(12L << 30))
+    def level(estBytes: Double, maxMem: Long*) =
+      Similarity.unitsLevel(BigDecimal(estBytes).toBigInt, maxMem, 0.5)
+    // the measured split points: sf0.1 and corpus_x10 at 4 GB, x100 and
+    // x1000 at 12 GB
+    assert(level(6e6, gb4) === MEMORY_AND_DISK)
+    assert(level(60e6, gb4) === MEMORY_AND_DISK)
+    assert(level(0.4e9, gb12) === MEMORY_AND_DISK)
+    assert(level(4.3e9, gb12) === DISK_ONLY)
+    // both sides of the switch at its edge, and the smallest executor rules
+    assert(level(gb4 / 2, gb4) === MEMORY_AND_DISK)
+    assert(level(gb4 / 2 + 1, gb4) === DISK_ONLY)
+    assert(level(0.4e9, gb12, gb4) === MEMORY_AND_DISK)
+    assert(level(2e9, gb12, gb4) === DISK_ONLY)
+    assert(level(2e9, gb12) === MEMORY_AND_DISK)
+  }
+
   test("blendLadder: 8 units per vector, rung 0 is the original, per-vector anchors decorrelate") {
     // filter, not limit: an unordered limit re-executes per union
     // branch of the ladder, so rungs of one vector could come from
