@@ -6,16 +6,21 @@ Usage: python3 scripts/plandiff.py <before.txt> <after.txt>
 Catalyst numbers every attribute (`doc_id#123L`), so two dumps of the
 same plan differ wherever an id moved. This masks expression ids
 (`#<digits>`), exchange ids (`plan_id=<digits>`), closure object names
-(`$Lambda$...@<hex>`) and the random suffixes of temp dirs (runs of 10
-or more digits), then prints a unified diff of what is left; no output
-and exit status 0 mean the plans are the same apart from those ids.
+(`$Lambda$...@<hex>`), the random suffixes of temp dirs (runs of 10
+or more digits), higher-order-function variable numbers
+(`lambda x_<digits>`) and RDD ids (`MapPartitionsRDD[<digits>]`), then
+prints a unified diff of what is left; no output and exit status 0 mean
+the plans are the same apart from those ids. The last two are
+JVM-global counters: they move whenever earlier code in the same JVM
+built a different number of lambda columns or RDDs.
 """
 import difflib
 import re
 import sys
 
 MASKS = [(r"#\d+", "#N"), (r"plan_id=\d+", "plan_id=N"),
-         (r"\$Lambda\$[\w/$]*@[0-9a-f]+", "$Lambda$N"), (r"\d{10,}", "N")]
+         (r"\$Lambda\$[\w/$]*@[0-9a-f]+", "$Lambda$N"), (r"\d{10,}", "N"),
+         (r"(lambda [A-Za-z]\w*?)_\d+\b", r"\1_N"), (r"RDD\[\d+\]", "RDD[N]")]
 
 
 def masked(path):

@@ -23,6 +23,27 @@ import graft.operators.Dedup
 object CorpusPipeline {
 
   def clean(docs: DataFrame, qualityMin: Double = 0.5, jaccardThreshold: Double = 0.6): DataFrame = {
+    val exactKept = scoredExactKept(docs, qualityMin)
+    // 3. near-dedup: LSH pairs over the surviving docs at the
+    //    CONTRACT geometry ("recall >= 90% at J = threshold, <= 1%
+    //    background candidates" -> (3, 10) at 0.6 — the advisor-derived
+    //    curve; the legacy (4, 2) default measured ~20% recall at
+    //    J ≈ 0.55 in the q253 audit, i.e. most near-dups WALKED THROUGH
+    //    this pipeline), keep cluster representatives (label == own id)
+    //    and untouched docs
+    val pairs = Dedup.minhashPairsContract(exactKept, "doc_id", "text",
+      threshold = jaccardThreshold)
+    val labels = Dedup.labelPropagate(pairs, 3)
+    exactKept.join(labels, exactKept("doc_id") === labels("doc"), "left_outer")
+      .filter(col("label").isNull || col("label") === col("doc_id"))
+      .select(col("doc_id"), col("lang_pred"), col("quality"), col("n_tokens"))
+  }
+
+  /** Steps 1–2 of [[clean]], shared with [[cleanKeepBest]]: scored docs
+    * (`doc_id, text, quality, lang_pred, n_tokens`) that pass the
+    * quality gate, exact-deduplicated, persisted.
+    */
+  private def scoredExactKept(docs: DataFrame, qualityMin: Double): DataFrame = {
     // 1. score + quality gate (codegen'd token aggregation, one
     //    shuffle on doc_id)
     val aggs = TextFunctions.tokenAggregates(docs, "doc_id", "text")
@@ -39,23 +60,10 @@ object CorpusPipeline {
     // feeds both the minhash pipeline and the final representative
     // join — persist (GraftCache-tracked) so scoring + dedup
     // aggregation run once
-    val exactKept = graft.GraftCache.registered(scored
+    graft.GraftCache.registered(scored
       .groupBy(TextFunctions.fingerprint(col("text")).as("fp"))
       .agg(min_by(struct(scored.columns.toIndexedSeq.map(col): _*), col("doc_id")).as("_r"))
       .select(col("_r.*")))
-    // 3. near-dedup: LSH pairs over the surviving docs at the
-    //    CONTRACT geometry ("recall >= 90% at J = threshold, <= 1%
-    //    background candidates" -> (3, 10) at 0.6 — the advisor-derived
-    //    curve; the legacy (4, 2) default measured ~20% recall at
-    //    J ≈ 0.55 in the q253 audit, i.e. most near-dups WALKED THROUGH
-    //    this pipeline), keep cluster representatives (label == own id)
-    //    and untouched docs
-    val pairs = Dedup.minhashPairsContract(exactKept, "doc_id", "text",
-      threshold = jaccardThreshold)
-    val labels = Dedup.labelPropagate(pairs, 3)
-    exactKept.join(labels, exactKept("doc_id") === labels("doc"), "left_outer")
-      .filter(col("label").isNull || col("label") === col("doc_id"))
-      .select(col("doc_id"), col("lang_pred"), col("quality"), col("n_tokens"))
   }
 
   /** The keep-BEST refinement of [[clean]]: identical quality gate and
@@ -71,17 +79,7 @@ object CorpusPipeline {
     */
   def cleanKeepBest(docs: DataFrame, qualityMin: Double = 0.5,
       jaccardThreshold: Double = 0.6): DataFrame = {
-    val aggs = TextFunctions.tokenAggregates(docs, "doc_id", "text")
-    val scored = docs.join(aggs, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), col("text"),
-        TextFunctions.qualityFromScores(col("text")).as("quality"),
-        TextFunctions.langIdFromScores.as("lang_pred"),
-        coalesce(col("n_tok"), lit(0L)).cast("int").as("n_tokens"))
-      .filter(col("quality") >= qualityMin)
-    val exactKept = graft.GraftCache.registered(scored
-      .groupBy(TextFunctions.fingerprint(col("text")).as("fp"))
-      .agg(min_by(struct(scored.columns.toIndexedSeq.map(col): _*), col("doc_id")).as("_r"))
-      .select(col("_r.*")))
+    val exactKept = scoredExactKept(docs, qualityMin)
     // contract geometry, same rationale as clean() step 3
     val pairs = Dedup.minhashPairsContract(exactKept, "doc_id", "text",
       threshold = jaccardThreshold)

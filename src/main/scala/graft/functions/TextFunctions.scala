@@ -85,9 +85,6 @@ object TextFunctions {
         i => concat_ws(" ", (0 until n).map(o => element_at(toks, i + o)): _*)))
       .otherwise(typedLit(Seq.empty[String]))
 
-  /** Token count. */
-  def tokenCount(text: Column): Column = size(tokenize(text))
-
   /** BPE-ish regex pieces: alphanumeric runs OR single non-alnum
     * non-space characters — the pre-tokenization split BPE vocabularies
     * are trained over (GPT-2-style, simplified to an engine-portable
@@ -98,9 +95,6 @@ object TextFunctions {
   val BpePiecePattern = "[a-z0-9]+|[^a-z0-9\\s]"
   def bpePieces(text: Column): Column =
     regexp_extract_all(lower(text), lit(BpePiecePattern), lit(0))
-
-  /** Piece count under the BPE-ish tokenizer. */
-  def pieceCount(text: Column): Column = size(bpePieces(text))
 
   /** Marker-word language ID: score each language by stopword hits and
     * take the deterministic argmax (ties resolved by the fixed language

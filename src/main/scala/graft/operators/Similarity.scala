@@ -106,14 +106,42 @@ object Similarity {
     val e = emb
       .select(col("vec_id"), col(blockCol).as("blk"), toDoubleVec(col("embedding")).as("e"))
       .withColumn("nrm", norm(col("e")))
-    Dedup.requireBoundedBlocks(e.select(col("blk")), Seq(col("blk")),
-      "Similarity.nearDupByLsh")
-    e.as("l").join(e.as("r"),
-        col("l.blk") === col("r.blk") && col("l.vec_id") < col("r.vec_id"))
+    blockedCosinePairs(e, "blk", "Similarity.nearDupByLsh", threshold)
+  }
+
+  /** The blocked self-join every pair path shares: (l, r) rows of `f`
+    * that agree on every key, with l.vec_id < r.vec_id. Refuses first,
+    * naming `lever`, when a block is large enough that the quadratic
+    * join would explode ([[Dedup.requireBoundedBlocks]]).
+    */
+  private def blockSelfJoin(f: DataFrame, keys: Seq[String], lever: String): DataFrame = {
+    Dedup.requireBoundedBlocks(f.select(keys.map(col): _*), keys.map(col), lever)
+    f.as("l").join(f.as("r"),
+      keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) &&
+        col("l.vec_id") < col("r.vec_id"))
+  }
+
+  /** Same-block pairs of `e` (vec_id, key, e, nrm) at cosine ≥
+    * `threshold`, scored inside the self-join.
+    */
+  private def blockedCosinePairs(e: DataFrame, key: String, lever: String,
+      threshold: Double): DataFrame =
+    blockSelfJoin(e, Seq(key), lever)
       .select(col("l.vec_id").as("vec_a"), col("r.vec_id").as("vec_b"),
         round(cosineWithNorms(col("l.e"), col("r.e"), col("l.nrm"), col("r.nrm")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-  }
+
+  /** Cosine verification of skinny candidates (vec_a, vec_b): each side
+    * attaches its vector and norm from `e` (vec_id, e, nrm) by a hash
+    * join, and pairs at cosine ≥ `threshold` are kept.
+    */
+  private def verifiedPairs(cand: DataFrame, e: DataFrame, threshold: Double): DataFrame =
+    cand
+      .join(e.select(col("vec_id").as("vec_a"), col("e").as("e_a"), col("nrm").as("n_a")), "vec_a")
+      .join(e.select(col("vec_id").as("vec_b"), col("e").as("e_b"), col("nrm").as("n_b")), "vec_b")
+      .select(col("vec_a"), col("vec_b"),
+        round(cosineWithNorms(col("e_a"), col("e_b"), col("n_a"), col("n_b")), 6).as("cos_sim"))
+      .filter(col("cos_sim") >= threshold)
 
   /** All same-LSH-bucket vector pairs above a cosine threshold — the
     * scale path for embedding near-dup (the label-blocked exact variant
@@ -133,13 +161,8 @@ object Similarity {
     val e = emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
       .withColumn("bucket", lshBucket(col("e"), planes, dim))
       .withColumn("nrm", norm(col("e")))
-    Dedup.requireBoundedBlocks(e.select(col("bucket")), Seq(col("bucket")),
-      s"more hyperplanes (planes > $planes: buckets = 2^planes, currently ${1L << planes})")
-    e.as("l").join(e.as("r"),
-        col("l.bucket") === col("r.bucket") && col("l.vec_id") < col("r.vec_id"))
-      .select(col("l.vec_id").as("vec_a"), col("r.vec_id").as("vec_b"),
-        round(cosineWithNorms(col("l.e"), col("r.e"), col("l.nrm"), col("r.nrm")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    blockedCosinePairs(e, "bucket",
+      s"more hyperplanes (planes > $planes: buckets = 2^planes, currently ${1L << planes})", threshold)
   }
 
   /** Smallest plane count p ≥ `minPlanes` with n / 2^p ≤ `target` —
@@ -190,9 +213,7 @@ object Similarity {
     */
   def lshSearch(emb: DataFrame, queryId: Long, k: Int, planes: Int, dim: Int, nprobe: Int): DataFrame = {
     val embD = emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
-    val qRows = embD.filter(col("vec_id") === queryId).select(col("e")).collect()
-    require(qRows.nonEmpty, s"lshSearch: query vector vec_id=$queryId not found in the corpus")
-    val qv = qRows.head.getSeq[Double](0)
+    val qv = queryVector(embD, queryId, "lshSearch")
     val projs = (0 until planes).map(p => (0 until dim).map(d => qv(d) * planeWeightLocal(p, d)).sum)
     // same 9-decimal quantization as lshBucket before the sign bit
     def q9(x: Double): Double =
@@ -201,10 +222,8 @@ object Similarity {
     val flips = projs.zipWithIndex.sortBy { case (pr, _) => math.abs(pr) }
       .take(math.max(0, nprobe - 1)).map(_._2)
     val probes = qBucket +: flips.map(p => qBucket ^ (1L << p))
-    embD.withColumn("bucket", lshBucket(col("e"), planes, dim))
-      .filter(col("bucket").isin(probes: _*) && col("vec_id") =!= queryId)
-      .select(col("vec_id"), round(cosine(col("e"), array(qv.map(lit): _*)), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+    cosineTopK(embD.withColumn("bucket", lshBucket(col("e"), planes, dim))
+      .filter(col("bucket").isin(probes: _*) && col("vec_id") =!= queryId), qv, k)
   }
 
   /** Random-hyperplane LSH bucket id (sign bits of `planes` projections
@@ -343,9 +362,7 @@ object Similarity {
       bgCosMicro: Long = 200000L, candPerRow: Long = 64L): DataFrame = {
     val (p, tb) = cosineLshGeometryForBudget(designN, thresholdCosMicro,
       targetRecallMicro, bgCosMicro, candPerRow)
-    keepMinOfComponents(emb,
-      nearDupByLshMulti(emb, p, tb, dim, thresholdCosMicro / 1e6)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+    keepMinOfComponents(emb, nearDupByLshMulti(emb, p, tb, dim, thresholdCosMicro / 1e6))
   }
 
   /** Multi-table hyperplane LSH near-dup pairs — the recall-contract
@@ -392,20 +409,12 @@ object Similarity {
           graft.plans.HyperplaneBuckets.buckets(col("e"), allW, dim, planes, tables))
         .as(Seq("tbl", "bucket")))
         .repartition(col("tbl"), col("bucket")))
-    Dedup.requireBoundedBlocks(banded, Seq(col("tbl"), col("bucket")),
-      s"more hyperplanes per table (planes > $planes: buckets/table = 2^planes, " +
-        s"currently ${1L << planes})")
-    val cand = banded.as("l").join(banded.as("r"),
-        col("l.tbl") === col("r.tbl") && col("l.bucket") === col("r.bucket") &&
-          col("l.vec_id") < col("r.vec_id"))
+    val cand = blockSelfJoin(banded, Seq("tbl", "bucket"),
+        s"more hyperplanes per table (planes > $planes: buckets/table = 2^planes, " +
+          s"currently ${1L << planes})")
       .select(col("l.vec_id").as("vec_a"), col("r.vec_id").as("vec_b"))
       .distinct()
-    cand
-      .join(e.select(col("vec_id").as("vec_a"), col("e").as("e_a"), col("nrm").as("n_a")), "vec_a")
-      .join(e.select(col("vec_id").as("vec_b"), col("e").as("e_b"), col("nrm").as("n_b")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        round(cosineWithNorms(col("e_a"), col("e_b"), col("n_a"), col("n_b")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    verifiedPairs(cand, e, threshold)
   }
 
   /** Deterministic anchor weight for the audit's blend ladder — same
@@ -523,6 +532,74 @@ object Similarity {
     BigDecimal(a.lazyZip(b).map((x, y) => (x - y) * (x - y)).sum)
       .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
+  /** The corpus as (vec_id, e: array<double>), persisted: the trained
+    * searches scan it once per training round plus the final pass, and
+    * without the persist every round re-derives the float→double
+    * projection from the parquet scan.
+    */
+  private def doubles(emb: DataFrame): DataFrame =
+    graft.GraftCache.registered(emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+
+  /** The query's vector fetched to the driver from a (vec_id, e) frame;
+    * fails naming the public entry point `caller` when the id is absent.
+    */
+  private def queryVector(embD: DataFrame, queryId: Long, caller: String): Seq[Double] = {
+    val rows = embD.filter(col("vec_id") === queryId).select(col("e")).collect()
+    require(rows.nonEmpty, s"$caller: query vector vec_id=$queryId not found in the corpus")
+    rows.head.getSeq[Double](0)
+  }
+
+  /** The (vec_id, e) rows with vec_id < `sampleQ`, by vec_id — the
+    * sample queries of the empirical recall audits.
+    */
+  private def sampleVectors(embD: DataFrame, sampleQ: Int): Seq[(Long, Seq[Double])] =
+    embD.filter(col("vec_id") < sampleQ).select(col("vec_id"), col("e")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1)
+
+  /** Cell ids nearest-first for a query vector: by (sq9 distance, cell),
+    * the rule [[assignCells]] applies, so the first probe IS the
+    * query's own cell.
+    */
+  private def probeOrder(cents: Seq[(Int, Seq[Double])], qv: Seq[Double]): Seq[Int] =
+    cents.map { case (c, cv) => (sq9(cv, qv), c) }.sorted.map(_._2)
+
+  /** Exact cosine top-k of `frame` (vec_id, e) against a driver-held
+    * query vector: the vector rides in as an array literal (no second
+    * scan, no broadcast crossJoin), scores round to 6 decimals, ties go
+    * to the lowest vec_id.
+    */
+  private def cosineTopK(frame: DataFrame, qv: Seq[Double], k: Int): DataFrame =
+    frame.select(col("vec_id"), round(cosine(col("e"), array(qv.map(lit): _*)), 6).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+
+  /** Empirical recall curve from a rank histogram: column `rankCol` of
+    * `ranks` is each truth item's catch depth, `levels` is one int
+    * column of depths. Output: (level, n_truth, n_caught,
+    * recall_micro) per level, recall in floored integer micros.
+    */
+  private def depthCurve(ranks: DataFrame, rankCol: String, levels: DataFrame): DataFrame = {
+    val (rank, level) = (col(rankCol), col(levels.columns.head))
+    broadcast(levels).crossJoin(ranks)
+      .groupBy(level)
+      .agg(count(lit(1)).as("n_truth"),
+        sum(when(rank <= level, 1L).otherwise(0L)).as("n_caught"))
+      .withColumn("recall_micro", expr("(n_caught * 1000000) div n_truth"))
+      .orderBy(level)
+  }
+
+  private def requireTarget(targetRecallMicro: Long): Unit =
+    require(targetRecallMicro >= 0 && targetRecallMicro <= 1000000,
+      s"targetRecallMicro must be in [0, 1e6], got $targetRecallMicro")
+
+  /** Smallest `nprobe` whose measured recall meets the target, read
+    * off a [[depthCurve]]; `cells` (probe everything) when none does.
+    */
+  private def smallestProbe(curve: DataFrame, targetRecallMicro: Long, cells: Int): Int =
+    curve.select(col("nprobe"), col("recall_micro"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      .collectFirst { case (p, r) if r >= targetRecallMicro => p }
+      .getOrElse(cells)
+
   /** Element-wise mean of array columns per group: posexplode → avg →
     * regroup in position order.
     */
@@ -574,13 +651,6 @@ object Similarity {
     cents
   }
 
-  /** [[kmeansCellsLocal]] re-exposed as a (cell, centroid) DataFrame. */
-  def kmeansCells(embD: DataFrame, k: Int, iters: Int): DataFrame = {
-    val spark = embD.sparkSession
-    import spark.implicits._
-    kmeansCellsLocal(embD, k, iters).toDF("cell", "centroid")
-  }
-
   /** IVF ANN with computed cells: assign corpus to trained cells once,
     * probe the `nprobe` nearest cells to the query, exact-search only
     * those. Assignment and probe filter are both map-side (centroids
@@ -591,24 +661,17 @@ object Similarity {
     * probe read nprobe/cells of the files at rest.
     */
   def ivfSearch(emb: DataFrame, queryId: Long, k: Int, cells: Int, iters: Int, nprobe: Int): DataFrame = {
-    // Persisted: scanned once per Lloyd round plus the final assignment
-    // — without this every round re-derives the float→double projection
-    // from the parquet scan.
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
-    val cents = kmeansCellsLocal(embD, cells, iters)
-    val qRows = embD.filter(col("vec_id") === queryId).select(col("e")).collect()
-    require(qRows.nonEmpty, s"ivfSearch: query vector vec_id=$queryId not found in the corpus")
-    val qv = qRows.head.getSeq[Double](0)
-    val probes = cents.map { case (c, cv) => (sq9(cv, qv), c) }.sorted.take(nprobe).map(_._2)
-    // the query vector is already on the driver — embed it as an array
-    // literal (like assignCells does for centroids) instead of a second
-    // scan + broadcast crossJoin
-    val qCol = array(qv.map(lit): _*)
-    assignCells(embD, cents)
-      .filter(col("cell").isin(probes: _*) && col("vec_id") =!= queryId)
-      .select(col("vec_id"), round(cosine(col("e"), qCol), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+    val embD = doubles(emb)
+    ivfSearchWith(embD, kmeansCellsLocal(embD, cells, iters), queryId, k, nprobe, "ivfSearch")
+  }
+
+  /** [[ivfSearch]] against already-trained cells. */
+  private def ivfSearchWith(embD: DataFrame, cents: Seq[(Int, Seq[Double])], queryId: Long,
+      k: Int, nprobe: Int, caller: String): DataFrame = {
+    val qv = queryVector(embD, queryId, caller)
+    val probes = probeOrder(cents, qv).take(nprobe)
+    cosineTopK(assignCells(embD, cents)
+      .filter(col("cell").isin(probes: _*) && col("vec_id") =!= queryId), qv, k)
   }
 
   /** IVF probe-count recall curve — the EMPIRICAL member of the
@@ -631,34 +694,38 @@ object Similarity {
     */
   def ivfProbeAudit(emb: DataFrame, k: Int, cells: Int, iters: Int,
       sampleQ: Int): DataFrame = {
+    val (embD, cents) = ivfTrained(emb, k, cells, iters, sampleQ)
+    ivfCurve(emb, embD, cents, cells, k, sampleQ)
+  }
+
+  /** The audit's argument check, then the cells trained on `emb`. */
+  private def ivfTrained(emb: DataFrame, k: Int, cells: Int, iters: Int,
+      sampleQ: Int): (DataFrame, Seq[(Int, Seq[Double])]) = {
     require(k >= 1 && cells >= 1 && sampleQ >= 1,
       s"need k, cells, sampleQ >= 1, got ($k, $cells, $sampleQ)")
+    val embD = doubles(emb)
+    (embD, kmeansCellsLocal(embD, cells, iters))
+  }
+
+  /** [[ivfProbeAudit]] against already-trained cells (`cells` levels:
+    * a Lloyd round can leave fewer centroids than asked for).
+    */
+  private def ivfCurve(emb: DataFrame, embD: DataFrame, cents: Seq[(Int, Seq[Double])],
+      cells: Int, k: Int, sampleQ: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
-    val cents = kmeansCellsLocal(embD, cells, iters)
     val assigned = assignCells(embD, cents).select(col("vec_id"), col("cell"))
-    // probe order per sample query: cells by (sq9 distance, cell) —
-    // the same rule ivfSearch applies. sampleQ * cells rows, driver-built.
-    val qVecs = embD.filter(col("vec_id") < sampleQ)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val ranks = qVecs.flatMap { case (qid, qv) =>
-      cents.map { case (c, cv) => (sq9(cv, qv), c) }.sorted.zipWithIndex
-        .map { case ((_, c), i) => (qid, c, i + 1) }
-    }.toSeq.toDF("query_id", "cell", "cell_rank")
+    // probe order per sample query — the rule ivfSearch applies;
+    // sampleQ * cells rows, driver-built
+    val ranks = sampleVectors(embD, sampleQ).flatMap { case (qid, qv) =>
+      probeOrder(cents, qv).zipWithIndex.map { case (c, i) => (qid, c, i + 1) }
+    }.toDF("query_id", "cell", "cell_rank")
     val truth = knnJoin(emb, col("vec_id") < sampleQ, k)
       .select(col("query_id"), col("vec_id"))
     val tr = truth.join(assigned, "vec_id")
       .join(broadcast(ranks), Seq("query_id", "cell"))
       .select(col("cell_rank"))
-    val levels = spark.range(1, cells + 1).select(col("id").cast("int").as("nprobe"))
-    broadcast(levels).crossJoin(tr)
-      .groupBy(col("nprobe"))
-      .agg(count(lit(1)).as("n_truth"),
-        sum(when(col("cell_rank") <= col("nprobe"), 1L).otherwise(0L)).as("n_caught"))
-      .withColumn("recall_micro", expr("(n_caught * 1000000) div n_truth"))
-      .orderBy(col("nprobe"))
+    depthCurve(tr, "cell_rank", spark.range(1, cells + 1).select(col("id").cast("int").as("nprobe")))
   }
 
   /** Smallest nprobe whose MEASURED sample recall meets the contract —
@@ -670,47 +737,57 @@ object Similarity {
     */
   def ivfProbesFor(emb: DataFrame, k: Int, cells: Int, iters: Int,
       sampleQ: Int, targetRecallMicro: Long): Int = {
-    require(targetRecallMicro >= 0 && targetRecallMicro <= 1000000,
-      s"targetRecallMicro must be in [0, 1e6], got $targetRecallMicro")
-    val curve = ivfProbeAudit(emb, k, cells, iters, sampleQ)
-      .select(col("nprobe"), col("recall_micro"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    curve.collectFirst { case (p, r) if r >= targetRecallMicro => p }
-      .getOrElse(cells)
+    requireTarget(targetRecallMicro)
+    val (embD, cents) = ivfTrained(emb, k, cells, iters, sampleQ)
+    smallestProbe(ivfCurve(emb, embD, cents, cells, k, sampleQ), targetRecallMicro, cells)
   }
 
   /** [[ivfSearch]] under a recall CONTRACT: nprobe derived from the
     * measured sample curve by [[ivfProbesFor]] instead of configured —
     * the production adoption, as `minhashPairsContract` /
-    * `semanticDedupLshContract` for the analytic families. The sample
-    * audit shares the corpus scan/quantizer with the search itself
-    * (both GraftCache-registered).
+    * `semanticDedupLshContract` for the analytic families. The cells
+    * are trained ONCE: the sample audit and the search share the
+    * persisted corpus projection and the driver-held centroids.
     */
   def ivfSearchContract(emb: DataFrame, queryId: Long, k: Int, cells: Int,
       iters: Int, targetRecallMicro: Long, sampleQ: Int): DataFrame = {
-    val nprobe = ivfProbesFor(emb, k, cells, iters, sampleQ, targetRecallMicro)
-    ivfSearch(emb, queryId, k, cells, iters, nprobe)
+    requireTarget(targetRecallMicro)
+    val (embD, cents) = ivfTrained(emb, k, cells, iters, sampleQ)
+    val nprobe = smallestProbe(ivfCurve(emb, embD, cents, cells, k, sampleQ), targetRecallMicro, cells)
+    ivfSearchWith(embD, cents, queryId, k, nprobe, "ivfSearchContract")
   }
+
+  /** Writes the trained centroids under `<path>/_centroids/` — the side
+    * table of the IVF and IVF-PQ indexes (underscore-prefixed paths are
+    * invisible to Spark's partition discovery).
+    */
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+      cents: Seq[(Int, Seq[Double])], path: String): Unit = {
+    import spark.implicits._
+    cents.toDF("cell", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+  }
+
+  /** The centroids a [[writeCentroids]] call stored under `path`. */
+  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[(Int, Seq[Double])] =
+    spark.read.parquet(s"$path/_centroids").collect()
+      .map(r => r.getAs[Int]("cell") -> r.getSeq[Double](r.fieldIndex("centroid"))).toSeq
 
   /** Train and WRITE an IVF index: the corpus assigned to k-means cells,
     * stored `partitionBy("cell")` so a probe's scan reads only the
     * probed cells' files — at rest, a probe touches nprobe/cells of the
     * data, which is what makes IVF beat LSH for repeated searches over
     * a static corpus. The trained centroids are stored under
-    * `_centroids/` inside the index path (underscore-prefixed paths are
-    * invisible to Spark's partition discovery, so `read.parquet(path)`
-    * sees only the data files).
+    * `_centroids/` inside the index path, so `read.parquet(path)` sees
+    * only the data files.
     */
   def writeIvfIndex(emb: DataFrame, path: String, cells: Int, iters: Int): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+    val embD = doubles(emb)
     val cents = kmeansCellsLocal(embD, cells, iters)
     assignCells(embD, cents)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-    cents.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+    writeCentroids(emb.sparkSession, cents, path)
   }
 
   /** Probe a [[writeIvfIndex]] index: nearest `nprobe` cells to the
@@ -722,14 +799,9 @@ object Similarity {
     */
   def ivfSearchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
       queryVec: Seq[Double], excludeId: Long, k: Int, nprobe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$path/_centroids").collect()
-      .map(r => r.getAs[Int]("cell") -> r.getSeq[Double](r.fieldIndex("centroid"))).toSeq
-    val probes = cents.map { case (c, cv) => (sq9(cv, queryVec), c) }.sorted.take(nprobe).map(_._2)
-    val qCol = array(queryVec.map(lit): _*)
-    spark.read.parquet(path)
-      .filter(col("cell").isin(probes: _*) && col("vec_id") =!= excludeId)
-      .select(col("vec_id"), round(cosine(col("e"), qCol), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+    val probes = probeOrder(readCentroids(spark, path), queryVec).take(nprobe)
+    cosineTopK(spark.read.parquet(path)
+      .filter(col("cell").isin(probes: _*) && col("vec_id") =!= excludeId), queryVec, k)
   }
 
   /** Semantic deduplication (SemDeDup, Abbas et al. 2023): k-means the
@@ -753,14 +825,11 @@ object Similarity {
     // the guard admits it, the arithmetic doesn't finish). Size cells
     // with the corpus, or use [[semanticDedupLsh]], whose auto-sized
     // buckets hold the curve with no tuning.
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+    val embD = doubles(emb)
     val cents = kmeansCellsLocal(embD, cells, iters)
     val assigned = assignCells(embD, cents)
       .select(col("vec_id"), col("cell").as("label"), col("e").as("embedding"))
-    keepMinOfComponents(emb,
-      nearDupExactBlocked(assigned, "label", threshold)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+    keepMinOfComponents(emb, nearDupExactBlocked(assigned, "label", threshold))
   }
 
   /** The scale path for semantic dedup: same contract as
@@ -774,17 +843,16 @@ object Similarity {
     * and for corpora where cells are sized to the data.
     */
   def semanticDedupLsh(emb: DataFrame, dim: Int, threshold: Double): DataFrame =
-    keepMinOfComponents(emb,
-      nearDupByLshAuto(emb, dim, threshold)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+    keepMinOfComponents(emb, nearDupByLshAuto(emb, dim, threshold))
 
   /** Shared dedup tail: exact connected components over the verified
-    * pair graph, drop every member but the min-id one, return the KEPT
-    * input rows (all columns). The pair stage is the only thing the
-    * dedup variants differ in.
+    * pair graph (`vec_a`, `vec_b`), drop every member but the min-id
+    * one, return the KEPT input rows (all columns). The pair stage is
+    * the only thing the dedup variants differ in.
     */
   private def keepMinOfComponents(emb: DataFrame, pairs: DataFrame): DataFrame = {
-    val drop = Dedup.connectedComponents(pairs)
+    val drop = Dedup.connectedComponents(
+        pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .filter(col("doc") =!= col("label"))
       .select(col("doc").as("vec_id"))
     emb.join(drop, Seq("vec_id"), "left_anti")
@@ -813,9 +881,7 @@ object Similarity {
       bgCosMicro: Long = 200000L, maxFpMicro: Long = 20000L): DataFrame = {
     val (p, tb) = cosineLshGeometryFor(thresholdCosMicro, targetRecallMicro,
       bgCosMicro, maxFpMicro)
-    keepMinOfComponents(emb,
-      nearDupByLshMulti(emb, p, tb, dim, thresholdCosMicro / 1e6)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+    keepMinOfComponents(emb, nearDupByLshMulti(emb, p, tb, dim, thresholdCosMicro / 1e6))
   }
 
   /** Deterministic near-dup ladder corpus: each input vector spawns 8
@@ -911,22 +977,20 @@ object Similarity {
       thresholdMicro: Long = 400000L, sampleQ: Int = 16): DataFrame = {
     require(cells >= 1 && iters >= 0 && sampleQ >= 1,
       s"need cells >= 1, iters >= 0, sampleQ >= 1, got ($cells, $iters, $sampleQ)")
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+    val embD = doubles(emb)
     semanticCellRecallAuditWith(emb, dim, kmeansCellsLocal(embD, cells, iters),
       thresholdMicro, sampleQ)
   }
 
   /** [[semanticCellRecallAudit]] against ALREADY-TRAINED cells — the
-    * overload the contract path uses so the (iters-round, corpus-scan)
+    * core the contract dedup shares, so the (iters-round, corpus-scan)
     * quantizer training runs ONCE per pipeline instead of once for the
     * audit and again for the assignment stage.
     */
-  def semanticCellRecallAuditWith(emb: DataFrame, dim: Int,
+  private def semanticCellRecallAuditWith(emb: DataFrame, dim: Int,
       cents: Seq[(Int, Seq[Double])], thresholdMicro: Long,
       sampleQ: Int): DataFrame = {
     val spark = emb.sparkSession
-    val cells = cents.size
     val probes = graft.GraftCache.registered(
       blendLadder(emb.filter(col("vec_id") < sampleQ), dim)
         .select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
@@ -937,49 +1001,16 @@ object Similarity {
       .select(round(cosine(col("l.e"), col("r.e")), 6).as("cos_sim"),
         array_min(zip_with(col("l.rk"), col("r.rk"), (x, y) => greatest(x, y))).as("depth"))
       .filter(col("cos_sim") >= lit(thresholdMicro.toDouble / 1e6))
-    val levels = spark.range(1, cells + 1).select(col("id").cast("int").as("nprobe"))
-    broadcast(levels).crossJoin(tr)
-      .groupBy(col("nprobe"))
-      .agg(count(lit(1)).as("n_truth"),
-        sum(when(col("depth") <= col("nprobe"), 1L).otherwise(0L)).as("n_caught"))
-      .withColumn("recall_micro", expr("(n_caught * 1000000) div n_truth"))
-      .orderBy(col("nprobe"))
-  }
-
-  /** Smallest probe depth whose MEASURED sample recall meets the
-    * contract — the advisor over [[semanticCellRecallAudit]]'s curve.
-    * Like [[ivfProbesFor]] it can never refuse: depth = cells puts
-    * every unit in every cell (candidate stage = all pairs), so the
-    * contract degrades to exact brute-force dedup instead of failing.
-    */
-  def semanticCellProbesFor(emb: DataFrame, dim: Int, cells: Int, iters: Int,
-      thresholdMicro: Long, targetRecallMicro: Long, sampleQ: Int = 16): Int = {
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
-    semanticCellProbesForWith(emb, dim, kmeansCellsLocal(embD, cells, iters),
-      thresholdMicro, targetRecallMicro, sampleQ)
-  }
-
-  /** [[semanticCellProbesFor]] against ALREADY-TRAINED cells (the
-    * train-once overload the contract dedup composes).
-    */
-  def semanticCellProbesForWith(emb: DataFrame, dim: Int,
-      cents: Seq[(Int, Seq[Double])], thresholdMicro: Long,
-      targetRecallMicro: Long, sampleQ: Int = 16): Int = {
-    require(targetRecallMicro >= 0 && targetRecallMicro <= 1000000,
-      s"targetRecallMicro must be in [0, 1e6], got $targetRecallMicro")
-    val curve = semanticCellRecallAuditWith(emb, dim, cents, thresholdMicro, sampleQ)
-      .select(col("nprobe"), col("recall_micro"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    curve.collectFirst { case (p, r) if r >= targetRecallMicro => p }
-      .getOrElse(cents.size)
+    depthCurve(tr, "depth", spark.range(1, cents.size + 1).select(col("id").cast("int").as("nprobe")))
   }
 
   /** [[semanticDedup]] under a recall CONTRACT — the production
     * adoption of the measured cell curve: each vector is assigned to
-    * its `nprobe` NEAREST cells (multi-probe, nprobe from
-    * [[semanticCellProbesFor]]) instead of exactly one, so a pair
-    * split by a cell boundary still cohabits a probed cell with
+    * its `nprobe` NEAREST cells (multi-probe: the smallest depth whose
+    * [[semanticCellRecallAudit]] sample recall meets the target; it
+    * never refuses, since depth = cells puts every unit in every cell
+    * and degrades to exact brute-force dedup) instead of exactly one,
+    * so a pair split by a cell boundary still cohabits a probed cell with
     * probability the AUDIT measured, not hoped. Candidates are
     * deduped across cells before the exact-cosine verify; the tail
     * (CC + keep-min) is [[keepMinOfComponents]], shared with every
@@ -990,14 +1021,14 @@ object Similarity {
   def semanticDedupCellsContract(emb: DataFrame, dim: Int, cells: Int,
       iters: Int, thresholdMicro: Long, targetRecallMicro: Long,
       sampleQ: Int = 16): DataFrame = {
+    requireTarget(targetRecallMicro)
     // train ONCE; the audit/advisor and the assignment stage share the
     // same driver-held centroids (training is deterministic, but with
     // iters > 0 re-training doubled the corpus-scan Lloyd rounds)
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+    val embD = doubles(emb)
     val cents = kmeansCellsLocal(embD, cells, iters)
-    val nprobe = semanticCellProbesForWith(emb, dim, cents,
-      thresholdMicro, targetRecallMicro, sampleQ)
+    val nprobe = smallestProbe(semanticCellRecallAuditWith(emb, dim, cents, thresholdMicro, sampleQ),
+      targetRecallMicro, cents.size)
     // "cell" below is the POSITION in cents (cellRankArray's key — id-
     // layout-independent), used purely as a cohabitation join key
     val assigned = graft.GraftCache.registered(
@@ -1005,20 +1036,12 @@ object Similarity {
         .select(col("vec_id"), col("e"),
           explode(filter(sequence(lit(0), lit(cents.size - 1)),
             c => element_at(col("rk"), c.cast("int") + 1) <= nprobe)).as("cell")))
-    Dedup.requireBoundedBlocks(assigned, Seq(col("cell")),
-      s"more cells (cells > $cells: cell population ~ nprobe*N/cells) or semanticDedupLshContract")
-    val cand = assigned.as("l").join(assigned.as("r"),
-        col("l.cell") === col("r.cell") && col("l.vec_id") < col("r.vec_id"))
-      .select(col("l.vec_id").as("a"), col("r.vec_id").as("b"))
+    val cand = blockSelfJoin(assigned, Seq("cell"),
+        s"more cells (cells > $cells: cell population ~ nprobe*N/cells) or semanticDedupLshContract")
+      .select(col("l.vec_id").as("vec_a"), col("r.vec_id").as("vec_b"))
       .distinct()
-    val e2 = embD.withColumn("nrm", norm(col("e")))
-    val pairs = cand
-      .join(e2.select(col("vec_id").as("a"), col("e").as("e_a"), col("nrm").as("n_a")), "a")
-      .join(e2.select(col("vec_id").as("b"), col("e").as("e_b"), col("nrm").as("n_b")), "b")
-      .filter(round(cosineWithNorms(col("e_a"), col("e_b"), col("n_a"), col("n_b")), 6)
-        >= lit(thresholdMicro.toDouble / 1e6))
-      .select(col("a").as("doc_a"), col("b").as("doc_b"))
-    keepMinOfComponents(emb, pairs)
+    keepMinOfComponents(emb,
+      verifiedPairs(cand, embD.withColumn("nrm", norm(col("e"))), thresholdMicro.toDouble / 1e6))
   }
 
   /** Per-vector symmetric int8 scalar quantization: scale =
@@ -1154,9 +1177,9 @@ object Similarity {
     * vec_id.
     */
   def pqSearchADC(emb: DataFrame, queryId: Long, k: Int, m: Int, ksub: Int, iters: Int): DataFrame = {
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
-    pqAdcScores(embD, queryId, m, ksub, iters)
+    val embD = doubles(emb)
+    val books = pqTrainLocal(embD, m, ksub, iters)
+    pqAdcScores(embD, books, queryVector(embD, queryId, "pqSearchADC"), queryId)
       .orderBy(col("adc_dist").asc, col("vec_id")).limit(k)
   }
 
@@ -1164,21 +1187,23 @@ object Similarity {
     * against codebooks trained on `embD` — the shared scan behind
     * [[pqSearchADC]] (direct top-k) and [[pqSearchRerank]] (shortlist).
     */
-  private def pqAdcScores(embD: DataFrame, queryId: Long, m: Int, ksub: Int, iters: Int): DataFrame = {
-    val books = pqTrainLocal(embD, m, ksub, iters)
-    val sub = books.head.head.length
-    val qRows = embD.filter(col("vec_id") === queryId).select(col("e")).collect()
-    require(qRows.nonEmpty, s"pqSearchADC: query vector vec_id=$queryId not found in the corpus")
-    val qv = qRows.head.getSeq[Double](0)
-    val tables: Seq[Seq[Double]] = books.zipWithIndex.map { case (book, j) =>
-      book.map(cvec => sq9(qv.slice(j * sub, (j + 1) * sub), cvec))
-    }
-    val adc = tables.zipWithIndex.map { case (tbl, j) =>
-      element_at(array(tbl.map(lit): _*), col("code").getItem(j) + 1)
-    }.reduce(_ + _)
+  private def pqAdcScores(embD: DataFrame, books: Seq[Seq[Seq[Double]]], qv: Seq[Double],
+      queryId: Long): DataFrame =
     assignPqCodes(embD, books)
       .filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"), round(adc, 6).as("adc_dist"))
+      .select(col("vec_id"), round(adcDistance(books, qv), 6).as("adc_dist"))
+
+  /** A row's ADC distance to the query vector `qv`: per subspace j, the
+    * sq9 distances from qv's j-th slice to book j's centroids form a
+    * literal table, looked up at `code[j]`; the m lookups sum in
+    * subspace order.
+    */
+  private def adcDistance(books: Seq[Seq[Seq[Double]]], qv: Seq[Double]): Column = {
+    val sub = books.head.head.length
+    books.zipWithIndex.map { case (book, j) =>
+      val tbl = book.map(cvec => sq9(qv.slice(j * sub, (j + 1) * sub), cvec))
+      element_at(array(tbl.map(lit): _*), col("code").getItem(j) + 1)
+    }.reduce(_ + _)
   }
 
   /** PQ search the way production systems actually run it (FAISS's
@@ -1198,17 +1223,21 @@ object Similarity {
     */
   def pqSearchRerank(emb: DataFrame, queryId: Long, k: Int, shortlist: Int,
       m: Int, ksub: Int, iters: Int): DataFrame = {
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
-    val short = pqAdcScores(embD, queryId, m, ksub, iters)
+    val embD = doubles(emb)
+    pqRerankWith(embD, pqTrainLocal(embD, m, ksub, iters), queryId, k, shortlist, "pqSearchRerank")
+  }
+
+  /** [[pqSearchRerank]] against already-trained codebooks; the query
+    * vector is fetched once and serves both the ADC tables and the
+    * exact re-rank.
+    */
+  private def pqRerankWith(embD: DataFrame, books: Seq[Seq[Seq[Double]]], queryId: Long,
+      k: Int, shortlist: Int, caller: String): DataFrame = {
+    val qv = queryVector(embD, queryId, caller)
+    val short = pqAdcScores(embD, books, qv, queryId)
       .orderBy(col("adc_dist").asc, col("vec_id")).limit(shortlist)
       .select(col("vec_id"))
-    val qv = embD.filter(col("vec_id") === queryId).select(col("e")).collect()
-      .head.getSeq[Double](0)
-    val qCol = array(qv.map(lit): _*)
-    embD.join(broadcast(short), "vec_id")
-      .select(col("vec_id"), round(cosine(col("e"), qCol), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+    cosineTopK(embD.join(broadcast(short), "vec_id"), qv, k)
   }
 
   /** PQ rerank-depth recall curve — the second EMPIRICAL member of the
@@ -1242,18 +1271,24 @@ object Similarity {
       s"need k, sampleQ >= 1 and maxDepthExp >= 0, got ($k, $sampleQ, $maxDepthExp)")
     val spark = emb.sparkSession
     import spark.implicits._
-    val ranks = pqAdcRanks(emb, m, ksub, iters, sampleQ)
-    val truth = knnJoin(emb, col("vec_id") < sampleQ, k)
-      .select(col("query_id"), col("vec_id"))
-    val tr = truth.join(ranks, Seq("query_id", "vec_id")).select(col("adc_rank"))
+    val embD = doubles(emb)
     val levels = (0 to maxDepthExp).map(j => k.toLong << j)
       .toDF("depth").select(col("depth").cast("int").as("depth"))
-    broadcast(levels).crossJoin(tr)
-      .groupBy(col("depth"))
-      .agg(count(lit(1)).as("n_truth"),
-        sum(when(col("adc_rank") <= col("depth"), 1L).otherwise(0L)).as("n_caught"))
-      .withColumn("recall_micro", expr("(n_caught * 1000000) div n_truth"))
-      .orderBy(col("depth"))
+    depthCurve(pqTruthRanks(emb, embD, pqTrainLocal(embD, m, ksub, iters), k, sampleQ),
+      "adc_rank", levels)
+  }
+
+  /** Each sample query's true top-k neighbors ([[knnJoin]]) with their
+    * ADC rank ([[pqAdcRanks]]) — the truth join behind
+    * [[pqRerankAudit]]'s histogram and [[pqRerankDepthFor]]'s order
+    * statistic. One column, `adc_rank`.
+    */
+  private def pqTruthRanks(emb: DataFrame, embD: DataFrame, books: Seq[Seq[Seq[Double]]],
+      k: Int, sampleQ: Int): DataFrame = {
+    val ranks = pqAdcRanks(embD, books, sampleQ)
+    val truth = knnJoin(emb, col("vec_id") < sampleQ, k)
+      .select(col("query_id"), col("vec_id"))
+    truth.join(ranks, Seq("query_id", "vec_id")).select(col("adc_rank"))
   }
 
   /** Every (sample query, corpus vector) pair's ADC rank — the shared
@@ -1265,15 +1300,11 @@ object Similarity {
     * vec_id)` per query — the exact truncation order of
     * [[pqSearchRerank]]'s shortlist.
     */
-  private def pqAdcRanks(emb: DataFrame, m: Int, ksub: Int, iters: Int,
+  private def pqAdcRanks(embD: DataFrame, books: Seq[Seq[Seq[Double]]],
       sampleQ: Int): DataFrame = {
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
-    val books = pqTrainLocal(embD, m, ksub, iters)
+    val m = books.size
     val sub = books.head.head.length
-    val qVecs = embD.filter(col("vec_id") < sampleQ)
-      .select(col("vec_id"), col("e")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).sortBy(_._1)
+    val qVecs = sampleVectors(embD, sampleQ)
     require(qVecs.nonEmpty, s"pqAdcRanks: no sample queries with vec_id < $sampleQ")
     val qStructs = qVecs.map { case (qid, qv) =>
       val tabs = books.zipWithIndex.map { case (book, j) =>
@@ -1287,7 +1318,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     assignPqCodes(embD, books)
       .select(col("vec_id"), col("code"),
-        explode(array(qStructs.toSeq: _*)).as("q"))
+        explode(array(qStructs: _*)).as("q"))
       .filter(col("vec_id") =!= col("q.query_id"))
       .select(col("q.query_id").as("query_id"), col("vec_id"),
         round(adc, 6).as("adc_dist"))
@@ -1309,13 +1340,15 @@ object Similarity {
     */
   def pqRerankDepthFor(emb: DataFrame, k: Int, m: Int, ksub: Int, iters: Int,
       sampleQ: Int, targetRecallMicro: Long): Int = {
-    require(targetRecallMicro >= 0 && targetRecallMicro <= 1000000,
-      s"targetRecallMicro must be in [0, 1e6], got $targetRecallMicro")
-    val ranks = pqAdcRanks(emb, m, ksub, iters, sampleQ)
-    val truth = knnJoin(emb, col("vec_id") < sampleQ, k)
-      .select(col("query_id"), col("vec_id"))
-    val tr = truth.join(ranks, Seq("query_id", "vec_id"))
-      .select(col("adc_rank")).collect().map(_.getInt(0)).sorted
+    requireTarget(targetRecallMicro)
+    val embD = doubles(emb)
+    pqDepthWith(emb, embD, pqTrainLocal(embD, m, ksub, iters), k, sampleQ, targetRecallMicro)
+  }
+
+  /** [[pqRerankDepthFor]] against already-trained codebooks. */
+  private def pqDepthWith(emb: DataFrame, embD: DataFrame, books: Seq[Seq[Seq[Double]]],
+      k: Int, sampleQ: Int, targetRecallMicro: Long): Int = {
+    val tr = pqTruthRanks(emb, embD, books, k, sampleQ).collect().map(_.getInt(0)).sorted
     val need = math.ceil(targetRecallMicro.toDouble * tr.length / 1000000.0).toInt
     if (need <= 0) k else math.max(k, tr(need - 1))
   }
@@ -1324,13 +1357,16 @@ object Similarity {
     * derived from the measured sample rank histogram by
     * [[pqRerankDepthFor]] instead of configured — the production
     * adoption for the PQ family, as [[ivfSearchContract]] for IVF.
-    * The audit shares the corpus scan and codebooks with the search
-    * (both GraftCache-registered).
+    * The codebooks are trained ONCE: the audit and the search share
+    * the persisted corpus projection and the driver-held books.
     */
   def pqSearchRerankContract(emb: DataFrame, queryId: Long, k: Int, m: Int,
       ksub: Int, iters: Int, targetRecallMicro: Long, sampleQ: Int): DataFrame = {
-    val depth = pqRerankDepthFor(emb, k, m, ksub, iters, sampleQ, targetRecallMicro)
-    pqSearchRerank(emb, queryId, k, depth, m, ksub, iters)
+    requireTarget(targetRecallMicro)
+    val embD = doubles(emb)
+    val books = pqTrainLocal(embD, m, ksub, iters)
+    val depth = pqDepthWith(emb, embD, books, k, sampleQ, targetRecallMicro)
+    pqRerankWith(embD, books, queryId, k, depth, "pqSearchRerankContract")
   }
 
   // ------------------------------------------------------------- IVF-PQ
@@ -1387,17 +1423,11 @@ object Similarity {
     */
   def ivfPqSearch(emb: DataFrame, queryId: Long, k: Int, cells: Int, nprobe: Int,
       m: Int, ksub: Int, iters: Int, shortlist: Int): DataFrame = {
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+    val embD = doubles(emb)
     val ((cents, books), coded) = ivfPqEncode(embD, cells, m, ksub, iters)
-    val qRows = embD.filter(col("vec_id") === queryId).select(col("e")).collect()
-    require(qRows.nonEmpty, s"ivfPqSearch: query vector vec_id=$queryId not found in the corpus")
-    val qv = qRows.head.getSeq[Double](0)
+    val qv = queryVector(embD, queryId, "ivfPqSearch")
     val short = ivfPqAdcShortlist(coded, cents, books, qv, queryId, nprobe, shortlist)
-    val qCol = array(qv.map(lit): _*)
-    embD.join(broadcast(short), "vec_id")
-      .select(col("vec_id"), round(cosine(col("e"), qCol), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+    cosineTopK(embD.join(broadcast(short), "vec_id"), qv, k)
   }
 
   /** The probe-pruned ADC shortlist over an IVF-PQ-coded frame: per
@@ -1409,18 +1439,13 @@ object Similarity {
   private def ivfPqAdcShortlist(coded: DataFrame, cents: Seq[(Int, Seq[Double])],
       books: Seq[Seq[Seq[Double]]], qv: Seq[Double], queryId: Long,
       nprobe: Int, shortlist: Int): DataFrame = {
-    val sub = books.head.head.length
-    val probes = cents.map { case (c, cv) => (sq9(cv, qv), c) }.sorted.take(nprobe).map(_._2)
+    val probes = probeOrder(cents, qv).take(nprobe)
     val centById = cents.toMap
     // each arm is null outside its cell, so coalesce picks the probed
     // cell's table sum (the filter below guarantees exactly one match)
     val adc = coalesce(probes.map { c =>
       val qr = qv.zip(centById(c)).map { case (x, y) => x - y }
-      val cellAdc = books.zipWithIndex.map { case (book, j) =>
-        val tbl = book.map(cvec => sq9(qr.slice(j * sub, (j + 1) * sub), cvec))
-        element_at(array(tbl.map(lit): _*), col("code").getItem(j) + 1)
-      }.reduce(_ + _)
-      when(col("cell") === c, cellAdc)
+      when(col("cell") === c, adcDistance(books, qr))
     }: _*)
     coded.filter(col("cell").isin(probes: _*) && col("vec_id") =!= queryId)
       .select(col("vec_id"), round(adc, 6).as("adc_dist"))
@@ -1443,13 +1468,10 @@ object Similarity {
       m: Int, ksub: Int, iters: Int): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val embD = graft.GraftCache.registered(
-      emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
-    val ((cents, books), coded) = ivfPqEncode(embD, cells, m, ksub, iters)
+    val ((cents, books), coded) = ivfPqEncode(doubles(emb), cells, m, ksub, iters)
     coded.select(col("vec_id"), col("code"), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-    cents.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+    writeCentroids(spark, cents, path)
     books.zipWithIndex.flatMap { case (book, j) =>
       book.zipWithIndex.map { case (cvec, c) => (j, c, cvec) } }
       .toDF("sub", "code", "centroid")
@@ -1464,8 +1486,7 @@ object Similarity {
   def ivfPqSearchIndexed(emb: DataFrame, path: String, queryVec: Seq[Double],
       excludeId: Long, k: Int, nprobe: Int, shortlist: Int): DataFrame = {
     val spark = emb.sparkSession
-    val cents = spark.read.parquet(s"$path/_centroids").collect()
-      .map(r => r.getAs[Int]("cell") -> r.getSeq[Double](r.fieldIndex("centroid"))).toSeq
+    val cents = readCentroids(spark, path)
     val bookRows = spark.read.parquet(s"$path/_books").collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Int]("code")) -> r.getSeq[Double](r.fieldIndex("centroid"))).toMap
     val m = bookRows.keys.map(_._1).max + 1
@@ -1473,12 +1494,9 @@ object Similarity {
     val books = (0 until m).map(j => (0 until ksub).map(c => bookRows((j, c))))
     val coded = spark.read.parquet(path)
     val short = ivfPqAdcShortlist(coded, cents, books, queryVec, excludeId, nprobe, shortlist)
-    val qCol = array(queryVec.map(lit): _*)
-    emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
+    cosineTopK(emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
       .filter(col("vec_id") =!= excludeId)
-      .join(broadcast(short), "vec_id")
-      .select(col("vec_id"), round(cosine(col("e"), qCol), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id")).limit(k)
+      .join(broadcast(short), "vec_id"), queryVec, k)
   }
 
   /** IVF-style ANN: coarse-partition the corpus by `label` (stands in
@@ -1508,12 +1526,12 @@ object Similarity {
     transform(vec, v => round(v.cast("double") * 1e6).cast("long"))
 
   /** Iterative Lloyd k-means whose EVERY step is exact integer
-    * arithmetic — the distributed clustering the IVF index builder
-    * uses ([[kmeansCells]]), made oracle-replayable at `iters > 0`:
-    * float Lloyd sums member vectors in partition-dependent order, so
-    * its centroids (and hence assignments near cell boundaries) can
-    * never hash-match another engine, which is why the graded IVF
-    * queries pinned `iters = 0` until now. Here vectors are
+    * arithmetic — the integer twin of the float [[kmeansCellsLocal]]
+    * the IVF, IVF-PQ and SemDeDup paths train with, made
+    * oracle-replayable at `iters > 0`: float Lloyd sums member vectors
+    * in partition-dependent order, so its centroids (and hence
+    * assignments near cell boundaries) can never hash-match another
+    * engine, which is why the graded IVF queries pin `iters = 0`. Here vectors are
     * micro-quantized ([[quantizeMicro]]), distances are integer
     * squared-L2, and the centroid update is the exact floor-division
     * `floorDiv(Σ memberᵢ, n)` per dimension — order-free, so Spark

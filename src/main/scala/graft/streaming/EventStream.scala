@@ -23,14 +23,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("total_value"))
 
-  /** Sliding-window event rate (5-minute hop over 1-hour window). */
-  def slidingRates(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour", "5 minutes").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("wstart"), col("n"))
-
   /** Session windows via the built-in session_window (gap-based). */
   def sessionCounts(events: DataFrame): DataFrame =
     events

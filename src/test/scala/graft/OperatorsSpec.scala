@@ -457,6 +457,24 @@ class OperatorsSpec extends SparkSpec {
     assert(got === exact)
   }
 
+  test("vector searches refuse an absent query vec_id, naming the function called") {
+    val emb = graft.queries.Q.t(spark, sf001, "embeddings")
+    val absent = 999999L
+    val searches: Seq[(String, () => Any)] = Seq(
+      "ivfSearch" -> (() => Similarity.ivfSearch(emb, absent, 10, cells = 4, iters = 0, nprobe = 2)),
+      "lshSearch" -> (() => Similarity.lshSearch(emb, absent, 10, planes = 6, dim = 64, nprobe = 2)),
+      "pqSearchADC" -> (() => Similarity.pqSearchADC(emb, absent, 10, m = 8, ksub = 16, iters = 0)),
+      "pqSearchRerank" -> (() => Similarity.pqSearchRerank(emb, absent, 10, shortlist = 50,
+        m = 8, ksub = 16, iters = 0)),
+      "ivfPqSearch" -> (() => Similarity.ivfPqSearch(emb, absent, 10, cells = 4, nprobe = 2,
+        m = 8, ksub = 16, iters = 0, shortlist = 50)))
+    for ((name, search) <- searches) {
+      val msg = intercept[IllegalArgumentException](search()).getMessage
+      assert(msg === s"requirement failed: $name: query vector vec_id=$absent not found in the corpus")
+    }
+    graft.GraftCache.releaseAll()
+  }
+
   test("HyperplaneBuckets kernel is bit-identical to the lshBucketAt expression tree") {
     val emb = graft.queries.Q.t(spark, sf001, "embeddings")
     val e = emb.select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("e"))

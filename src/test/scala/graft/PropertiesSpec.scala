@@ -775,4 +775,360 @@ class PropertiesSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/contract_new/_geometry").collect().toSeq ===
       spark.read.parquet(s"$dir/contract_old/_geometry").collect().toSeq)
   }
+
+  /** The cosine-family searches, audits and pair paths as they stood
+    * before Similarity's shared search core (one trained quantizer per
+    * call, one query fetch, one cosine top-k, one pair core, one
+    * recall-curve skeleton), inlined so the laws below pin the merged
+    * forms. Similarity's private helpers are inlined too.
+    */
+  private object OldSimilarity {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions._
+    import graft.operators.Similarity.{assignCells, assignPqCodes, blendLadder, cosine,
+      cosineWithNorms, kmeansCellsLocal, knnJoin, lshBucket, norm, pqTrainLocal, toDoubleVec}
+
+    def sq9(a: Seq[Double], b: Seq[Double]): Double =
+      BigDecimal(a.lazyZip(b).map((x, y) => (x - y) * (x - y)).sum)
+        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+    def cellRankArray(cents: Seq[(Int, Seq[Double])]): Column = {
+      val scored = array(cents.map { case (cell, cvec) =>
+        val carr = array(cvec.map(lit): _*)
+        val d = aggregate(zip_with(col("e"), carr, (x, y) => (x - y) * (x - y)),
+          lit(0.0), (acc, v) => acc + v)
+        struct(round(d, 9).as("d"), lit(cell).as("cell"))
+      }: _*)
+      val order = transform(array_sort(scored), x => x.getField("cell"))
+      transform(array(cents.map(c => lit(c._1)): _*), c => array_position(order, c))
+    }
+
+    def keepMinOfComponents(emb: DataFrame, pairs: DataFrame): DataFrame = {
+      val drop = Dedup.connectedComponents(pairs)
+        .filter(col("doc") =!= col("label"))
+        .select(col("doc").as("vec_id"))
+      emb.join(drop, Seq("vec_id"), "left_anti")
+    }
+
+    def ivfProbeAudit(emb: DataFrame, k: Int, cells: Int, iters: Int,
+        sampleQ: Int): DataFrame = {
+      val spark = emb.sparkSession
+      import spark.implicits._
+      val embD = graft.GraftCache.registered(
+        emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+      val cents = kmeansCellsLocal(embD, cells, iters)
+      val assigned = assignCells(embD, cents).select(col("vec_id"), col("cell"))
+      val qVecs = embD.filter(col("vec_id") < sampleQ)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
+      val ranks = qVecs.flatMap { case (qid, qv) =>
+        cents.map { case (c, cv) => (sq9(cv, qv), c) }.sorted.zipWithIndex
+          .map { case ((_, c), i) => (qid, c, i + 1) }
+      }.toSeq.toDF("query_id", "cell", "cell_rank")
+      val truth = knnJoin(emb, col("vec_id") < sampleQ, k)
+        .select(col("query_id"), col("vec_id"))
+      val tr = truth.join(assigned, "vec_id")
+        .join(broadcast(ranks), Seq("query_id", "cell"))
+        .select(col("cell_rank"))
+      val levels = spark.range(1, cells + 1).select(col("id").cast("int").as("nprobe"))
+      broadcast(levels).crossJoin(tr)
+        .groupBy(col("nprobe"))
+        .agg(count(lit(1)).as("n_truth"),
+          sum(when(col("cell_rank") <= col("nprobe"), 1L).otherwise(0L)).as("n_caught"))
+        .withColumn("recall_micro", expr("(n_caught * 1000000) div n_truth"))
+        .orderBy(col("nprobe"))
+    }
+
+    def ivfProbesFor(emb: DataFrame, k: Int, cells: Int, iters: Int,
+        sampleQ: Int, targetRecallMicro: Long): Int = {
+      val curve = ivfProbeAudit(emb, k, cells, iters, sampleQ)
+        .select(col("nprobe"), col("recall_micro"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      curve.collectFirst { case (p, r) if r >= targetRecallMicro => p }
+        .getOrElse(cells)
+    }
+
+    def semanticCellRecallAuditWith(emb: DataFrame, dim: Int,
+        cents: Seq[(Int, Seq[Double])], thresholdMicro: Long,
+        sampleQ: Int): DataFrame = {
+      val spark = emb.sparkSession
+      val cells = cents.size
+      val probes = graft.GraftCache.registered(
+        blendLadder(emb.filter(col("vec_id") < sampleQ), dim)
+          .select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
+          .select(col("vec_id"), col("e"), cellRankArray(cents).as("rk"),
+            expr("vec_id div 8").as("grp")))
+      val tr = probes.as("l").join(probes.as("r"),
+          col("l.grp") === col("r.grp") && col("l.vec_id") < col("r.vec_id"))
+        .select(round(cosine(col("l.e"), col("r.e")), 6).as("cos_sim"),
+          array_min(zip_with(col("l.rk"), col("r.rk"), (x, y) => greatest(x, y))).as("depth"))
+        .filter(col("cos_sim") >= lit(thresholdMicro.toDouble / 1e6))
+      val levels = spark.range(1, cells + 1).select(col("id").cast("int").as("nprobe"))
+      broadcast(levels).crossJoin(tr)
+        .groupBy(col("nprobe"))
+        .agg(count(lit(1)).as("n_truth"),
+          sum(when(col("depth") <= col("nprobe"), 1L).otherwise(0L)).as("n_caught"))
+        .withColumn("recall_micro", expr("(n_caught * 1000000) div n_truth"))
+        .orderBy(col("nprobe"))
+    }
+
+    def semanticCellRecallAudit(emb: DataFrame, dim: Int, cells: Int, iters: Int,
+        thresholdMicro: Long, sampleQ: Int): DataFrame = {
+      val embD = graft.GraftCache.registered(
+        emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+      semanticCellRecallAuditWith(emb, dim, kmeansCellsLocal(embD, cells, iters),
+        thresholdMicro, sampleQ)
+    }
+
+    def semanticCellProbesForWith(emb: DataFrame, dim: Int,
+        cents: Seq[(Int, Seq[Double])], thresholdMicro: Long,
+        targetRecallMicro: Long, sampleQ: Int): Int = {
+      val curve = semanticCellRecallAuditWith(emb, dim, cents, thresholdMicro, sampleQ)
+        .select(col("nprobe"), col("recall_micro"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      curve.collectFirst { case (p, r) if r >= targetRecallMicro => p }
+        .getOrElse(cents.size)
+    }
+
+    def pqAdcRanks(emb: DataFrame, m: Int, ksub: Int, iters: Int,
+        sampleQ: Int): DataFrame = {
+      val embD = graft.GraftCache.registered(
+        emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+      val books = pqTrainLocal(embD, m, ksub, iters)
+      val sub = books.head.head.length
+      val qVecs = embD.filter(col("vec_id") < sampleQ)
+        .select(col("vec_id"), col("e")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Double](1)).sortBy(_._1)
+      val qStructs = qVecs.map { case (qid, qv) =>
+        val tabs = books.zipWithIndex.map { case (book, j) =>
+          array(book.map(cvec => lit(sq9(qv.slice(j * sub, (j + 1) * sub), cvec))): _*)
+        }
+        struct(lit(qid).as("query_id"), array(tabs: _*).as("tab"))
+      }
+      val adc = (0 until m).map(j =>
+        element_at(element_at(col("q.tab"), j + 1), col("code").getItem(j) + 1))
+        .reduce(_ + _)
+      import org.apache.spark.sql.expressions.Window
+      assignPqCodes(embD, books)
+        .select(col("vec_id"), col("code"),
+          explode(array(qStructs.toSeq: _*)).as("q"))
+        .filter(col("vec_id") =!= col("q.query_id"))
+        .select(col("q.query_id").as("query_id"), col("vec_id"),
+          round(adc, 6).as("adc_dist"))
+        .withColumn("adc_rank", row_number().over(
+          Window.partitionBy(col("query_id"))
+            .orderBy(col("adc_dist").asc, col("vec_id").asc)))
+        .select(col("query_id"), col("vec_id"), col("adc_rank"))
+    }
+
+    def pqRerankAudit(emb: DataFrame, k: Int, m: Int, ksub: Int, iters: Int,
+        sampleQ: Int, maxDepthExp: Int): DataFrame = {
+      val spark = emb.sparkSession
+      import spark.implicits._
+      val ranks = pqAdcRanks(emb, m, ksub, iters, sampleQ)
+      val truth = knnJoin(emb, col("vec_id") < sampleQ, k)
+        .select(col("query_id"), col("vec_id"))
+      val tr = truth.join(ranks, Seq("query_id", "vec_id")).select(col("adc_rank"))
+      val levels = (0 to maxDepthExp).map(j => k.toLong << j)
+        .toDF("depth").select(col("depth").cast("int").as("depth"))
+      broadcast(levels).crossJoin(tr)
+        .groupBy(col("depth"))
+        .agg(count(lit(1)).as("n_truth"),
+          sum(when(col("adc_rank") <= col("depth"), 1L).otherwise(0L)).as("n_caught"))
+        .withColumn("recall_micro", expr("(n_caught * 1000000) div n_truth"))
+        .orderBy(col("depth"))
+    }
+
+    def pqRerankDepthFor(emb: DataFrame, k: Int, m: Int, ksub: Int, iters: Int,
+        sampleQ: Int, targetRecallMicro: Long): Int = {
+      val ranks = pqAdcRanks(emb, m, ksub, iters, sampleQ)
+      val truth = knnJoin(emb, col("vec_id") < sampleQ, k)
+        .select(col("query_id"), col("vec_id"))
+      val tr = truth.join(ranks, Seq("query_id", "vec_id"))
+        .select(col("adc_rank")).collect().map(_.getInt(0)).sorted
+      val need = math.ceil(targetRecallMicro.toDouble * tr.length / 1000000.0).toInt
+      if (need <= 0) k else math.max(k, tr(need - 1))
+    }
+
+    def nearDupExactBlocked(emb: DataFrame, blockCol: String, threshold: Double): DataFrame = {
+      val e = emb
+        .select(col("vec_id"), col(blockCol).as("blk"), toDoubleVec(col("embedding")).as("e"))
+        .withColumn("nrm", norm(col("e")))
+      Dedup.requireBoundedBlocks(e.select(col("blk")), Seq(col("blk")),
+        "Similarity.nearDupByLsh")
+      e.as("l").join(e.as("r"),
+          col("l.blk") === col("r.blk") && col("l.vec_id") < col("r.vec_id"))
+        .select(col("l.vec_id").as("vec_a"), col("r.vec_id").as("vec_b"),
+          round(cosineWithNorms(col("l.e"), col("r.e"), col("l.nrm"), col("r.nrm")), 6).as("cos_sim"))
+        .filter(col("cos_sim") >= threshold)
+    }
+
+    def nearDupByLsh(emb: DataFrame, planes: Int, dim: Int, threshold: Double): DataFrame = {
+      val e = emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
+        .withColumn("bucket", lshBucket(col("e"), planes, dim))
+        .withColumn("nrm", norm(col("e")))
+      Dedup.requireBoundedBlocks(e.select(col("bucket")), Seq(col("bucket")),
+        s"more hyperplanes (planes > $planes: buckets = 2^planes, currently ${1L << planes})")
+      e.as("l").join(e.as("r"),
+          col("l.bucket") === col("r.bucket") && col("l.vec_id") < col("r.vec_id"))
+        .select(col("l.vec_id").as("vec_a"), col("r.vec_id").as("vec_b"),
+          round(cosineWithNorms(col("l.e"), col("r.e"), col("l.nrm"), col("r.nrm")), 6).as("cos_sim"))
+        .filter(col("cos_sim") >= threshold)
+    }
+
+    def nearDupByLshMulti(emb: DataFrame, planes: Int, tables: Int, dim: Int,
+        threshold: Double): DataFrame = {
+      val e = graft.GraftCache.registered(
+        emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e"))
+          .withColumn("nrm", norm(col("e"))))
+      val allW = Array.tabulate(tables * planes * dim)(i =>
+        graft.operators.Similarity.planeWeightLocal(i / dim, i % dim))
+      val banded = graft.GraftCache.registered(
+        e.select(col("vec_id"), posexplode(
+            graft.plans.HyperplaneBuckets.buckets(col("e"), allW, dim, planes, tables))
+          .as(Seq("tbl", "bucket")))
+          .repartition(col("tbl"), col("bucket")))
+      Dedup.requireBoundedBlocks(banded, Seq(col("tbl"), col("bucket")),
+        s"more hyperplanes per table (planes > $planes: buckets/table = 2^planes, " +
+          s"currently ${1L << planes})")
+      val cand = banded.as("l").join(banded.as("r"),
+          col("l.tbl") === col("r.tbl") && col("l.bucket") === col("r.bucket") &&
+            col("l.vec_id") < col("r.vec_id"))
+        .select(col("l.vec_id").as("vec_a"), col("r.vec_id").as("vec_b"))
+        .distinct()
+      cand
+        .join(e.select(col("vec_id").as("vec_a"), col("e").as("e_a"), col("nrm").as("n_a")), "vec_a")
+        .join(e.select(col("vec_id").as("vec_b"), col("e").as("e_b"), col("nrm").as("n_b")), "vec_b")
+        .select(col("vec_a"), col("vec_b"),
+          round(cosineWithNorms(col("e_a"), col("e_b"), col("n_a"), col("n_b")), 6).as("cos_sim"))
+        .filter(col("cos_sim") >= threshold)
+    }
+
+    def semanticDedupCellsContract(emb: DataFrame, dim: Int, cells: Int,
+        iters: Int, thresholdMicro: Long, targetRecallMicro: Long,
+        sampleQ: Int): DataFrame = {
+      val embD = graft.GraftCache.registered(
+        emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("e")))
+      val cents = kmeansCellsLocal(embD, cells, iters)
+      val nprobe = semanticCellProbesForWith(emb, dim, cents,
+        thresholdMicro, targetRecallMicro, sampleQ)
+      val assigned = graft.GraftCache.registered(
+        embD.select(col("vec_id"), col("e"), cellRankArray(cents).as("rk"))
+          .select(col("vec_id"), col("e"),
+            explode(filter(sequence(lit(0), lit(cents.size - 1)),
+              c => element_at(col("rk"), c.cast("int") + 1) <= nprobe)).as("cell")))
+      Dedup.requireBoundedBlocks(assigned, Seq(col("cell")),
+        s"more cells (cells > $cells: cell population ~ nprobe*N/cells) or semanticDedupLshContract")
+      val cand = assigned.as("l").join(assigned.as("r"),
+          col("l.cell") === col("r.cell") && col("l.vec_id") < col("r.vec_id"))
+        .select(col("l.vec_id").as("a"), col("r.vec_id").as("b"))
+        .distinct()
+      val e2 = embD.withColumn("nrm", norm(col("e")))
+      val pairs = cand
+        .join(e2.select(col("vec_id").as("a"), col("e").as("e_a"), col("nrm").as("n_a")), "a")
+        .join(e2.select(col("vec_id").as("b"), col("e").as("e_b"), col("nrm").as("n_b")), "b")
+        .filter(round(cosineWithNorms(col("e_a"), col("e_b"), col("n_a"), col("n_b")), 6)
+          >= lit(thresholdMicro.toDouble / 1e6))
+        .select(col("a").as("doc_a"), col("b").as("doc_b"))
+      keepMinOfComponents(emb, pairs)
+    }
+  }
+
+  test("law: the empirical recall audits and advisors ≡ their old bodies (trained and init quantizers)") {
+    import graft.operators.Similarity
+    val emb = graft.queries.Q.t(spark, sf001, "embeddings")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = df.collect().toSeq
+    for (iters <- Seq(0, 1)) {
+      val ivf = rows(Similarity.ivfProbeAudit(emb, k = 10, cells = 8, iters = iters, sampleQ = 16))
+      assert(ivf.size === 8 && ivf === rows(OldSimilarity.ivfProbeAudit(emb, 10, 8, iters, 16)), s"iters=$iters")
+      val cell = rows(Similarity.semanticCellRecallAudit(emb, dim = 64, cells = 8, iters = iters,
+        thresholdMicro = 400000L, sampleQ = 16))
+      assert(cell.nonEmpty &&
+        cell === rows(OldSimilarity.semanticCellRecallAudit(emb, 64, 8, iters, 400000L, 16)), s"iters=$iters")
+      val pq = rows(Similarity.pqRerankAudit(emb, k = 10, m = 8, ksub = 16, iters = iters, sampleQ = 16))
+      assert(pq.size === 9 && pq === rows(OldSimilarity.pqRerankAudit(emb, 10, 8, 16, iters, 16, 8)),
+        s"iters=$iters")
+      // the advisors on both ends of the target range and inside it
+      for (target <- Seq(0L, 500000L, 900000L, 1000000L)) {
+        assert(Similarity.ivfProbesFor(emb, 10, 8, iters, 16, target) ===
+          OldSimilarity.ivfProbesFor(emb, 10, 8, iters, 16, target), s"iters=$iters target=$target")
+        assert(Similarity.pqRerankDepthFor(emb, 10, 8, 16, iters, 16, target) ===
+          OldSimilarity.pqRerankDepthFor(emb, 10, 8, 16, iters, 16, target), s"iters=$iters target=$target")
+      }
+      GraftCache.releaseAll()
+    }
+  }
+
+  test("law: the blocked pair core and the shared verify ≡ the old pair paths, on both sides of the block guard") {
+    import graft.operators.Similarity
+    val key = "graft.block.maxBucket"
+    val emb = graft.queries.Q.t(spark, sf001, "embeddings")
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    def kept(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
+    def failure(body: => Any): String = intercept[IllegalArgumentException](body).getMessage
+    val exact = pairs(Similarity.nearDupExactBlocked(emb, "label", 0.4))
+    assert(exact.nonEmpty && exact === pairs(OldSimilarity.nearDupExactBlocked(emb, "label", 0.4)))
+    val lsh = pairs(Similarity.nearDupByLsh(emb, planes = 4, dim = 64, threshold = 0.3))
+    assert(lsh.nonEmpty && lsh === pairs(OldSimilarity.nearDupByLsh(emb, 4, 64, 0.3)))
+    val multi = pairs(Similarity.nearDupByLshMulti(emb, planes = 8, tables = 3, dim = 64, threshold = 0.25))
+    assert(multi.nonEmpty && multi === pairs(OldSimilarity.nearDupByLshMulti(emb, 8, 3, 64, 0.25)))
+    val keptSizes = for (target <- Seq(0L, 900000L, 1000000L)) yield {
+      val got = kept(Similarity.semanticDedupCellsContract(emb, dim = 64, cells = 8, iters = 0,
+        thresholdMicro = 400000L, targetRecallMicro = target, sampleQ = 16))
+      assert(got === kept(OldSimilarity.semanticDedupCellsContract(emb, 64, 8, 0, 400000L, target, 16)),
+        s"target=$target")
+      got.size
+    }
+    assert(keptSizes.min < 500, "no vector was deduplicated")
+    GraftCache.releaseAll()
+    // the guard's edge: the largest label block passes at limit = its
+    // size and refuses one below, with the old message, on every path
+    val top = emb.groupBy("label").count().agg(org.apache.spark.sql.functions.max("count")).head.getLong(0)
+    try {
+      spark.conf.set(key, top.toString)
+      assert(pairs(Similarity.nearDupExactBlocked(emb, "label", 0.4)) === exact)
+      spark.conf.set(key, (top - 1).toString)
+      assert(failure(Similarity.nearDupExactBlocked(emb, "label", 0.4)) ===
+        failure(OldSimilarity.nearDupExactBlocked(emb, "label", 0.4)))
+      spark.conf.set(key, "1")
+      assert(failure(Similarity.nearDupByLsh(emb, 4, 64, 0.3)) ===
+        failure(OldSimilarity.nearDupByLsh(emb, 4, 64, 0.3)))
+      assert(failure(Similarity.nearDupByLshMulti(emb, 8, 3, 64, 0.25)) ===
+        failure(OldSimilarity.nearDupByLshMulti(emb, 8, 3, 64, 0.25)))
+      assert(failure(Similarity.semanticDedupCellsContract(emb, 64, 8, 0, 400000L, 900000L, 16)) ===
+        failure(OldSimilarity.semanticDedupCellsContract(emb, 64, 8, 0, 400000L, 900000L, 16)))
+    } finally {
+      spark.conf.unset(key)
+      GraftCache.releaseAll()
+    }
+  }
+
+  test("the IVF and PQ search contracts train their quantizer once: fewer jobs than advisor + search") {
+    import graft.operators.Similarity
+    val emb = graft.queries.Q.t(spark, sf001, "embeddings")
+    def jobs(body: => Any): Int = {
+      val n = jobsIn(spark)(body)
+      GraftCache.releaseAll()
+      n
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).toSeq
+    for (iters <- Seq(0, 2)) {
+      val nprobe = Similarity.ivfProbesFor(emb, 10, 8, iters, 16, 900000L)
+      val ivfApart = jobs(Similarity.ivfProbesFor(emb, 10, 8, iters, 16, 900000L)) +
+        jobs(Similarity.ivfSearch(emb, 0L, 10, 8, iters, nprobe))
+      val ivfOnce = jobs(Similarity.ivfSearchContract(emb, 0L, 10, 8, iters, 900000L, 16))
+      assert(ivfOnce < ivfApart, s"iters=$iters: contract $ivfOnce jobs vs $ivfApart apart")
+      assert(ids(Similarity.ivfSearchContract(emb, 0L, 10, 8, iters, 900000L, 16)) ===
+        ids(Similarity.ivfSearch(emb, 0L, 10, 8, iters, nprobe)))
+      val depth = Similarity.pqRerankDepthFor(emb, 10, 8, 16, iters, 16, 900000L)
+      val pqApart = jobs(Similarity.pqRerankDepthFor(emb, 10, 8, 16, iters, 16, 900000L)) +
+        jobs(Similarity.pqSearchRerank(emb, 0L, 10, depth, 8, 16, iters))
+      val pqOnce = jobs(Similarity.pqSearchRerankContract(emb, 0L, 10, 8, 16, iters, 900000L, 16))
+      assert(pqOnce < pqApart, s"iters=$iters: contract $pqOnce jobs vs $pqApart apart")
+      assert(ids(Similarity.pqSearchRerankContract(emb, 0L, 10, 8, 16, iters, 900000L, 16)) ===
+        ids(Similarity.pqSearchRerank(emb, 0L, 10, depth, 8, 16, iters)))
+      GraftCache.releaseAll()
+    }
+  }
 }
