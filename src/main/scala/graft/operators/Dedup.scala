@@ -86,7 +86,7 @@ object Dedup {
 
   /** A MinHash permutation family: permutation `i` of the base hash
     * column. [[permuted]] (fixed table, i < 8) and [[permutedAffine]]
-    * (any i) are the two families; the signature aggregate, the pair
+    * (any i) are the two families; [[signaturesOf]], the pair
     * core and [[lshRecallAudit]] take one as an argument.
     */
   type Permutation = (Column, Int) => Column
@@ -112,53 +112,102 @@ object Dedup {
     docs.groupBy(fingerprint(col(textCol)).as("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Hashed 3-word shingles: (doc_id, h) with h = 31-bit md5-derived
-    * hash. The single expensive map-side pass (tokenize + shingle +
-    * md5) that every minhash stage derives from. Shingling runs as a
-    * typed flatMap (sliding window over the token array): ~3x faster
-    * than the `transform`/`element_at` higher-order-function form,
-    * whose lambda evaluation falls out of whole-stage codegen. The
-    * md5 hash stays an expression (codegen kernel).
+  /** Hashed 3-word shingles in long format: one (doc_id, h) row per
+    * shingle, h = the 31-bit md5-derived hash. For the callers that
+    * join or count single shingles (rare-shingle blocking, containment,
+    * decontamination, q254); the MinHash family takes the per-document
+    * set from [[shingleSets]] instead. Shingling runs as a typed
+    * flatMap (sliding window over the token array): ~3x faster than
+    * the `transform`/`element_at` higher-order-function form, whose
+    * lambda evaluation falls out of whole-stage codegen. The md5 hash
+    * stays an expression (codegen kernel). A null text gives no
+    * shingles; a null id fails, naming `idCol`.
     */
   def shingleHashes(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
+    docs.select(col(idCol).cast("long"), col(textCol)).as[(Option[Long], String)]
       .flatMap { case (id, text) =>
-        val tk = graft.functions.Tokenize.closure(text)
-        if (tk.length < 3) Iterator.empty
-        else tk.sliding(3).map(s => (id, s.mkString(" ")))
+        val d = docId(id, idCol, "shingleHashes")
+        shingleWindows(text).map(s => (d, s))
       }
       .toDF("doc_id", "shingle")
       .select(col("doc_id"), h31(col("shingle")).as("h"))
   }
 
-  /** MinHash signatures from hashed shingles: doc_id, mh0..mh{k-1}
-    * under the permutation family `perm`, then the `sets` columns.
-    * One grouped min-aggregate (map-side combined), k permutations as
-    * expressions over the same base hash. The ONE signature aggregate:
-    * the pair core appends its `array<int>` hash set
-    * ([[intHashSet]]), the at-rest index writers and probers their
-    * `array<bigint>` one ([[indexSigSets]]), so signatures and sets
-    * come out of a single aggregation (the q51 lesson).
+  /** The sorted, distinct set of a document's shingle hashes: one
+    * (doc_id, hs: array<int>) row per document with at least one
+    * shingle — the unit every MinHash signature, band key and Jaccard
+    * verify is computed from. The set is built in the shingling
+    * closure itself (same tokens, window and `Md5Hash.hash % P` as
+    * [[h31]], so `hs` holds exactly the `h` values [[shingleHashes]]
+    * emits for the document), so no row per shingle ever reaches a
+    * shuffle or an aggregate. An id on several input rows gets the
+    * union of their sets: one exchange on `doc_id`, Spark's
+    * memory-managed sort, then a streaming union of adjacent rows
+    * ([[graft.plans.SortedSetUnion]], a sort-based aggregate over
+    * document rows), holding one document at a time. The result stays
+    * hash-partitioned on `doc_id`, so the band join's candidate
+    * `distinct` above it needs no exchange of its own. A null text
+    * gives no shingles; a null id fails, naming `idCol`.
     */
-  def signaturesFromHashes(sh: DataFrame, k: Int = 8, perm: Permutation = permuted,
-      sets: Seq[Column] = Nil): DataFrame = {
-    require(k >= 1, s"signature width k must be >= 1, got $k")
-    val aggs = (0 until k).map(i => min(perm(col("h"), i)).as(s"mh$i")) ++ sets
-    sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  def shingleSets(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col(idCol).cast("long"), col(textCol)).as[(Option[Long], String)]
+      .flatMap { case (id, text) =>
+        val d = docId(id, idCol, "shingleSets")
+        val hs = hashSet(text)
+        if (hs.isEmpty) Iterator.empty else Iterator.single((d, hs))
+      }
+      .toDF("doc_id", "hs")
+      .repartition(col("doc_id"))
+      .groupBy(col("doc_id"))
+      .agg(graft.plans.SortedSetUnion.sorted_set_union(col("hs")).as("hs"))
   }
 
-  /** Sorted distinct hash set as `array<int>`: `h` is a 31-bit hash,
-    * so the cast is lossless and the sort order is unchanged — §2.3
-    * narrower types, halving the set payload in cached frames and in
-    * the verify joins' replication.
+  /** The 3-word shingles of one text as space-joined windows over the
+    * [[graft.functions.Tokenize.closure]] tokens; none for a null text
+    * or one of fewer than 3 tokens (as SQL's `explode(split(NULL))`).
     */
-  private def intHashSet: Column = sort_array(collect_set(col("h").cast("int"))).as("hs")
+  private def shingleWindows(text: String): Iterator[String] =
+    if (text == null) Iterator.empty
+    else {
+      val tk = graft.functions.Tokenize.closure(text)
+      if (tk.length < 3) Iterator.empty else tk.sliding(3).map(_.mkString(" "))
+    }
+
+  private def docId(id: Option[Long], idCol: String, caller: String): Long =
+    id.getOrElse(throw new IllegalArgumentException(
+      s"$caller: null $idCol: every document needs an id to be shingled"))
+
+  /** Sorted distinct [[h31]] hashes of a text's shingles. */
+  private def hashSet(text: String): Array[Int] = {
+    val hs = shingleWindows(text).map { s =>
+      (graft.plans.Md5Hash.hash(org.apache.spark.unsafe.types.UTF8String.fromString(s)) % P).toInt
+    }.toArray
+    java.util.Arrays.sort(hs)
+    var n = 0
+    for (h <- hs) if (n == 0 || hs(n - 1) != h) { hs(n) = h; n += 1 }
+    if (n == hs.length) hs else java.util.Arrays.copyOf(hs, n)
+  }
+
+  /** MinHash signatures of per-document hash sets: doc_id,
+    * mh0..mh{k-1} under the permutation family `perm`, then `hs`. The
+    * ONE signature definition: mh_i is the least `perm(h, i)` over the
+    * row's set, computed per row with no shuffle, so a sketch frame is
+    * built from [[shingleSets]] in one pass.
+    */
+  def signaturesOf(sets: DataFrame, k: Int = 8, perm: Permutation = permuted): DataFrame = {
+    require(k >= 1, s"signature width k must be >= 1, got $k")
+    val mins = (0 until k).map(i =>
+      array_min(transform(col("hs"), h => perm(h.cast("long"), i))).as(s"mh$i"))
+    sets.select(col("doc_id") +: mins :+ col("hs"): _*)
+  }
 
   /** MinHash signatures over 3-word shingles: doc_id, mh0..mh{k-1}. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String, k: Int = 8): DataFrame =
-    signaturesFromHashes(shingleHashes(docs, idCol, textCol), k)
+    signaturesOf(shingleSets(docs, idCol, textCol), k).drop("hs")
 
   /** (doc_id, band, band_key) rows for a signature frame — the banding
     * used by [[minhashCandidates]] and stored at rest by
@@ -240,28 +289,22 @@ object Dedup {
   private val BandCacheMinBands = 8
 
   /** Exact Jaccard over shingle sets for candidate pairs — the verify
-    * step after LSH banding.
+    * step after LSH banding. The sets are the hashed [[shingleSets]]
+    * (identical to string sets modulo 31-bit collisions; the oracle
+    * computes the same hashed form).
     */
   def jaccardVerify(docs: DataFrame, candidates: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame =
-    jaccardVerifyHashed(shingleHashes(docs, idCol, textCol), candidates, threshold)
-
-  /** Jaccard verification over *hashed* shingle sets: set arithmetic on
-    * longs instead of 3-word strings (identical result modulo 31-bit
-    * collisions; the oracle computes the same hashed form). Much
-    * cheaper arrays to intersect, and `sh` can be a persisted frame
-    * shared with signature computation.
-    */
-  def jaccardVerifyHashed(sh: DataFrame, candidates: DataFrame, threshold: Double): DataFrame =
-    verifyCandidatesWithSets(candidates, sh.groupBy(col("doc_id")).agg(intHashSet), threshold)
+    verifyCandidatesWithSets(candidates, shingleSets(docs, idCol, textCol), threshold)
 
   /** Shared verify tail: attach each candidate pair's (doc_id, hs) hash
     * sets via two hash joins (AQE broadcasts the set side when it
     * fits — per-pair arrays never cross a shuffle) and keep pairs at or
     * above the Jaccard threshold.
     *
-    * `hs` must be SORTED sets (every producer sorts once per doc at
-    * aggregation): the per-pair Jaccard is then one merge scan
+    * `hs` must be SORTED sets (every producer sorts once per doc, in
+    * [[shingleSets]]' closure or [[pairsFromHashes]]' aggregate): the
+    * per-pair Jaccard is then one merge scan
     * ([[graft.plans.SortedIntersectCount]]) plus the set identity
     * |A ∪ B| = |A| + |B| - |A ∩ B| — versus `array_intersect` +
     * `array_union`, which build two hash sets per PAIR (measured ~3x
@@ -292,33 +335,44 @@ object Dedup {
         size(col("hs_a")).as("na"), size(col("hs_b")).as("nb"))
 
   /** End-to-end MinHash near-dup pipeline over 3-word shingles — see
-    * [[pairsFromHashes]] for the shared shuffle-minimal shape (one
-    * persisted signature/set aggregation, skinny band-join candidates,
-    * broadcastable set attachment).
+    * [[pairsFromSets]] for the shared shuffle-minimal shape (one
+    * persisted sketch frame, skinny band-join candidates, broadcastable
+    * set attachment).
     */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, bands: Int = 2, threshold: Double = 0.6): DataFrame =
-    pairsFromHashes(shingleHashes(docs, idCol, textCol), k, bands, threshold)
+    pairsFromSets(shingleSets(docs, idCol, textCol), k, bands, threshold, permuted)
 
-  /** The MinHash+LSH pair pipeline over any (doc_id, h) hashed feature
-    * frame — shared by the shingle variant ([[minhashPairs]]) and the
-    * token variant ([[ngramJaccardPairsLsh]]). LSH bounds bucket
-    * cohabitation by SIMILARITY — which still saturates when the corpus
-    * holds huge classes of (near-)identical feature sets: a class of m
-    * same-signature docs yields m^2/2 verified pairs no matter how the
-    * candidates are found (measured: SOAK.json q72 bends superlinearly
-    * on the synthetic corpus, whose ~31-token vocabulary makes whole
-    * token SETS collide). The standard composition collapses exact
-    * duplicates first ([[exactDupGroups]], as CorpusPipeline.clean
-    * does) so LSH only ever sees one representative per identical
-    * class. ONE aggregation computes
-    * the k signature mins AND the shingle set per doc (persisted, so
-    * both derivations read it once); the band self-join then carries
-    * only (doc_id, band_key) — candidate pairs are deduped while still
-    * skinny, and the hash sets are attached by two hash joins (AQE
-    * broadcasts the set side when it fits) so per-pair arrays never
-    * cross a shuffle. On high-collision corpora this is the difference
-    * between shuffling kilobytes and shuffling the candidate arrays.
+  /** The MinHash+LSH pair pipeline over long-format (doc_id, h) hashed
+    * features (q254's shingle rows, [[ngramJaccardPairsLsh]]'s token
+    * hashes): the rows are grouped into the per-document sets
+    * [[shingleSets]] builds directly — the sorted distinct `h` as
+    * `array<int>` (`h` is a 31-bit hash, so the cast is lossless and
+    * keeps the order) — then signed and paired by [[pairsFromSets]].
+    */
+  def pairsFromHashes(sh: DataFrame, k: Int, bands: Int, threshold: Double,
+      perm: Permutation = permuted): DataFrame =
+    pairsFromSets(sh.groupBy(col("doc_id")).agg(sort_array(collect_set(col("h").cast("int"))).as("hs")),
+      k, bands, threshold, perm)
+
+  /** The MinHash+LSH pair core over per-document (doc_id, hs) sets. LSH
+    * bounds bucket cohabitation by SIMILARITY — which still saturates
+    * when the corpus holds huge classes of (near-)identical feature
+    * sets: a class of m same-signature docs yields m^2/2 verified pairs
+    * no matter how the candidates are found (measured: SOAK.json q72
+    * bends superlinearly on the synthetic corpus, whose ~31-token
+    * vocabulary makes whole token SETS collide). The standard
+    * composition collapses exact duplicates first ([[exactDupGroups]],
+    * as CorpusPipeline.clean does) so LSH only ever sees one
+    * representative per identical class. The sketch frame — the k
+    * signature mins ([[signaturesOf]]) beside the set they came from —
+    * is persisted, so banding and verify read it once; the band
+    * self-join then carries only (doc_id, band_key) — candidate pairs
+    * are deduped while still skinny, and the hash sets are attached by
+    * two hash joins (AQE broadcasts the set side when it fits) so
+    * per-pair arrays never cross a shuffle. On high-collision corpora
+    * this is the difference between shuffling kilobytes and shuffling
+    * the candidate arrays.
     *
     * Every MinHash pair variant is this core at a geometry: k
     * permutations of family `perm` in `bands` bands of k / bands rows.
@@ -326,11 +380,11 @@ object Dedup {
     * use the fixed [[permuted]] table (k <= 8); the contract, budget
     * and auto variants pass [[permutedAffine]] with k = rows · bands.
     */
-  def pairsFromHashes(sh: DataFrame, k: Int, bands: Int, threshold: Double,
-      perm: Permutation = permuted): DataFrame = {
-    val sigSets = graft.GraftCache.registered(signaturesFromHashes(sh, k, perm, Seq(intHashSet)))
+  private def pairsFromSets(sets: DataFrame, k: Int, bands: Int, threshold: Double,
+      perm: Permutation): DataFrame = {
+    val sigSets = graft.GraftCache.registered(signaturesOf(sets, k, perm))
     // band join + skinny-candidate dedup and the verify tail are the
-    // single shared implementations — the extra hs column rides along
+    // single shared implementations — the hs column rides along
     // harmlessly through minhashCandidates' projection
     verifyCandidatesWithSets(minhashCandidates(sigSets, k, bands),
       sigSets.select(col("doc_id"), col("hs")), threshold)
@@ -466,7 +520,7 @@ object Dedup {
       candPerRow: Long = 64L): DataFrame = {
     val (r, b) = minhashGeometryForBudget(designN,
       math.round(threshold * 1000000L), targetRecallMicro, bgMicro, candPerRow)
-    pairsFromHashes(shingleHashes(docs, idCol, textCol), r * b, b, threshold, permutedAffine)
+    pairsFromSets(shingleSets(docs, idCol, textCol), r * b, b, threshold, permutedAffine)
   }
 
   /** [[minhashPairs]] at a CONTRACT-derived geometry: (rows, bands)
@@ -478,8 +532,8 @@ object Dedup {
     * at J = 0.9. This is the variant production cleaning paths use
     * ([[graft.examples.CorpusPipeline]], the q252 leakage-safe split):
     * the default contract resolves to (3, 10) = 30 affine
-    * permutations — a wider signature aggregate (30 vs 8 mins over
-    * the same shingle frame, map-side combined) traded for a recall
+    * permutations — a wider signature (30 vs 8 mins over the same
+    * per-document sets, computed per row) traded for a recall
     * floor the geometry can actually honor. The derivation is exact
     * BigInt arithmetic over integer micros, so a SQL oracle resolving
     * the same contract replays the identical geometry. The fp ceiling
@@ -492,7 +546,7 @@ object Dedup {
       bgMicro: Long = 100000L, maxFpMicro: Long = 10000L): DataFrame = {
     val (r, b) = minhashGeometryFor(math.round(threshold * 1000000L),
       targetRecallMicro, bgMicro, maxFpMicro)
-    pairsFromHashes(shingleHashes(docs, idCol, textCol), r * b, b, threshold, permutedAffine)
+    pairsFromSets(shingleSets(docs, idCol, textCol), r * b, b, threshold, permutedAffine)
   }
 
   /** [[minhashPairs]] with the band width sized from the corpus count
@@ -507,7 +561,7 @@ object Dedup {
     */
   def minhashPairsAuto(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, targetBucket: Long = 250L): DataFrame =
-    pairsFromHashes(shingleHashes(docs, idCol, textCol),
+    pairsFromSets(shingleSets(docs, idCol, textCol),
       2 * minhashRowsFor(docs.count(), targetBucket), 2, threshold, permutedAffine)
 
   /** LSH-banded token-Jaccard near-dup pairs — the 100 TB alternative
@@ -1445,9 +1499,10 @@ object Dedup {
     * Index bytes are O(corpus docs), not O(corpus bytes): a fingerprint
     * row is 32 hex chars, a band row ~3 longs' worth, and `hs` the
     * distinct shingle hashes — the 100 TB corpus's text never lives in
-    * the index. Signatures and sets come out of ONE aggregation (the
-    * q51 lesson), and banding goes through [[bandKeys]] so index
-    * buckets are bit-identical to in-session LSH.
+    * the index. Signatures are computed from the per-document sets
+    * [[shingleSets]] builds, in the same persisted frame as the sets,
+    * and banding goes through [[bandKeys]] so index buckets are
+    * bit-identical to in-session LSH.
     */
   def writeDedupIndex(corpus: DataFrame, idCol: String, textCol: String, path: String,
       k: Int = 8, bands: Int = 2): Unit =
@@ -1455,7 +1510,7 @@ object Dedup {
 
   /** The index writer shared by [[writeDedupIndex]] and
     * [[writeDedupIndexContract]]: `fingerprints/`, `bands/` and
-    * `sets/` from one persisted signature/set aggregate.
+    * `sets/` from one persisted sketch frame.
     */
   private def writeIndexTables(corpus: DataFrame, idCol: String, textCol: String,
       path: String, k: Int, bands: Int, perm: Permutation): Unit = {
@@ -1468,16 +1523,17 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$path/sets")
   }
 
-  /** The index's persisted signature/set aggregate: k mins of family
-    * `perm` plus the sorted hash set as `array<bigint>`, the at-rest
-    * `sets/` format (ROADMAP item 5 narrows it behind a version). ONE
-    * definition for the writers and the probers, so an index written
-    * today always agrees with a batch signed tomorrow.
+  /** The index's persisted sketch frame: [[shingleSets]] signed by
+    * [[signaturesOf]] (k mins of family `perm`), with the sorted hash
+    * set cast to `array<bigint>`, the at-rest `sets/` format (ROADMAP
+    * item 5 narrows it behind a version; the cast keeps values and
+    * order). ONE definition for the writers and the probers, so an
+    * index written today always agrees with a batch signed tomorrow.
     */
   private def indexSigSets(docs: DataFrame, idCol: String, textCol: String, k: Int,
       perm: Permutation): DataFrame =
-    graft.GraftCache.registered(signaturesFromHashes(shingleHashes(docs, idCol, textCol), k, perm,
-      Seq(sort_array(collect_set(col("h"))).as("hs"))))
+    graft.GraftCache.registered(signaturesOf(shingleSets(docs, idCol, textCol), k, perm)
+      .withColumn("hs", col("hs").cast("array<bigint>")))
 
   /** Incremental dedup of a new batch against a [[writeDedupIndex]]
     * index: per new doc, verdict `exact_dup` (fingerprint already in
@@ -1765,9 +1821,9 @@ object Dedup {
     * same entity-resolution blocking as [[containmentPairs]], bounded
     * by [[requireBoundedBlocks]]) with exact hashed-set Jaccard ≥
     * `floorMicro`, bucketed by decile. Caught: the pair cohabits at
-    * least one band of the k/bands MinHash signature built from the
-    * SAME persisted hashed-shingle frame (blocking, verification, and
-    * signatures read it once). Recall is reported in integer micros
+    * least one band of the k/bands MinHash signature of the SAME
+    * persisted class sets (blocking reads their exploded shingles,
+    * verification and signatures the sets themselves). Recall is reported in integer micros
     * via `div` — operands nonnegative, so DuckDB `//` replays it
     * bit-for-bit. The truth set is the blocked stratum, not all O(n²)
     * pairs: pairs sharing only ubiquitous shingles are out of scope by
@@ -1804,23 +1860,19 @@ object Dedup {
     // hs as array<int> (lossless for the 31-bit hash, same sort order):
     // §2.3 — the audit's dominant x100 stage is attaching hs_a/hs_b to
     // ~148M truth-candidate pairs through two exchanges (stage-break in
-    // NOTES_r14), and the int sets halve exactly those bytes. Only the
-    // collect_set payload is cast; `shingleHashes` keeps its long `h`.
-    // The `h` that `sh` explodes back out of `hs` (and so rare/blocked/
-    // sigs) is int, and the affine permutations multiply it by long
-    // literals, so every derived value is bit-identical.
+    // NOTES_r14), and the int sets halve exactly those bytes. The `h`
+    // that `sh` explodes back out of `hs` (and so rare/blocked) is int.
     val classes = graft.GraftCache.registered(
-      shingleHashes(texts, "doc_id", "txt").distinct()
-        .groupBy(col("doc_id"))
-        .agg(intHashSet)
+      shingleSets(texts, "doc_id", "txt")
         .join(texts.select(col("doc_id"), col("m")), "doc_id")
         .groupBy(col("hs"))
         .agg(min(col("doc_id")).as("doc_id"), sum(col("m")).as("m")))
     val sh = graft.GraftCache.registered(
       classes.select(col("doc_id"), explode(col("hs")).as("h")))
-    // built before the blocking guard's job, so a family that cannot
-    // reach width k fails at once
-    val sigs = signaturesFromHashes(sh, k, perm)
+    // signed from the class sets themselves, and built before the
+    // blocking guard's job, so a family that cannot reach width k
+    // fails at once
+    val sigs = signaturesOf(classes, k, perm)
     // persisted for the same reason as [[simhashRecallAudit]]'s truth
     // pairs: cache-isolate the TRUTH stage (blocked self-join +
     // distinct) from the banding probe, so a warm re-run rides the

@@ -2,7 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{ArrayUnion, AttributeReference, BinaryExpression,
+  Expression, If, IsNull, Literal, SortArray}
+import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -74,4 +77,34 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
 object SortedIntersectCount {
   def sorted_intersect_count(a: Column, b: Column): Column =
     GraftBridge.column(SortedIntersectCount(GraftBridge.expression(a), GraftBridge.expression(b)))
+}
+
+/** Union of sorted, duplicate-free set columns as a declarative
+  * aggregate: the buffer is the set so far, a group's first row is
+  * taken as it is, and only a repeated key pays `sort_array(array_union)`.
+  * Its array buffer is not fixed-width and it is not a typed imperative
+  * aggregate, so Spark plans it as a sort-based aggregate: on input
+  * already clustered by the key it sorts (memory-managed, spilling) and
+  * streams the adjacent rows of one key at a time, with no hash map of
+  * buffers, and keeps the key's hash partitioning for the operators
+  * above it.
+  */
+case class SortedSetUnion(child: Expression) extends DeclarativeAggregate with UnaryLike[Expression] {
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = true
+  private lazy val set = AttributeReference("set", child.dataType)()
+  override lazy val aggBufferAttributes: Seq[AttributeReference] = set :: Nil
+  override lazy val initialValues: Seq[Expression] = Literal.create(null, child.dataType) :: Nil
+  override lazy val updateExpressions: Seq[Expression] = union(set, child) :: Nil
+  override lazy val mergeExpressions: Seq[Expression] = union(set.left, set.right) :: Nil
+  override lazy val evaluateExpression: Expression = set
+  private def union(a: Expression, b: Expression): Expression =
+    If(IsNull(a), b, If(IsNull(b), a, SortArray(ArrayUnion(a, b), Literal(true))))
+  override protected def withNewChildInternal(newChild: Expression): SortedSetUnion =
+    copy(child = newChild)
+}
+
+object SortedSetUnion {
+  def sorted_set_union(c: Column): Column =
+    GraftBridge.column(SortedSetUnion(GraftBridge.expression(c)).toAggregateExpression())
 }

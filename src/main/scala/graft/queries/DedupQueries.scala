@@ -518,7 +518,7 @@ object DedupQueries {
         .orderBy(col("doc_id"))),
 
     // LSH banding (2 bands x 4 rows) + hashed-Jaccard verification;
-    // signatures and shingle sets from one persisted aggregation.
+    // signatures and shingle sets in one persisted sketch frame.
     "q51_minhash_pairs" -> ((s, dir) =>
       Dedup.minhashPairs(t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_a"), col("doc_b"))),

@@ -42,6 +42,45 @@ class OperatorsSpec extends SparkSpec {
     assert(pairs.exists(p => p._1 == 0L && p._2 == 1L))
   }
 
+  test("shingling: a null text gives no shingles, in every MinHash entry point and the decontamination overlap") {
+    // as the oracle's generate_series(1, len(NULL) - 2) and the
+    // expression tokenizer's explode(split(NULL)): no rows, no failure
+    val text = "the quick brown fox jumps over the lazy dog"
+    val docs = Seq((0L, text, false), (1L, null, false), (2L, text, false), (3L, null, true),
+      (4L, "the quick brown fox", true)).toDF("doc_id", "body", "bench")
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).toSeq.sorted
+    assert(ids(Dedup.shingleHashes(docs, "doc_id", "body").select("doc_id").distinct()) === Seq(0L, 2L, 4L))
+    assert(ids(Dedup.shingleSets(docs, "doc_id", "body")) === Seq(0L, 2L, 4L))
+    assert(ids(Dedup.minhashSignatures(docs, "doc_id", "body")) === Seq(0L, 2L, 4L))
+    val pairs = Dedup.minhashPairs(docs, "doc_id", "body", threshold = 0.5).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(pairs === Seq((0L, 2L))) // doc 4's 2 shingles are 2/7 of the others'
+    val cand = Seq((0L, 1L), (0L, 2L)).toDF("doc_a", "doc_b")
+    assert(Dedup.jaccardVerify(docs, cand, "doc_id", "body", 0.5).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((0L, 2L)))
+    // docs 0 and 2 hold all 2 benchmark shingles among their 7
+    val overlap = graft.operators.Curation.shingleOverlap(docs, col("bench"), "doc_id", "body", 0.2)
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_hits")).toMap
+    assert(overlap === Map(0L -> 2L, 2L -> 2L))
+    graft.GraftCache.releaseAll()
+  }
+
+  test("shingling: a null id fails with a message naming the id column") {
+    val docs = Seq[(Option[Long], String)]((Some(0L), "the quick brown fox jumps"), (None, "the quick brown fox"))
+      .toDF("key", "body")
+    def failure(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    }
+    val msgs = Seq(
+      failure(Dedup.shingleHashes(docs, "key", "body").collect()),
+      failure(Dedup.shingleSets(docs, "key", "body").collect()),
+      failure(Dedup.minhashSignatures(docs, "key", "body").collect()),
+      failure(Dedup.minhashPairs(docs, "key", "body").collect()))
+    msgs.foreach(m => assert(m.contains("null key") && !m.contains("NOT_NULL_ASSERT_VIOLATION"), m))
+    graft.GraftCache.releaseAll()
+  }
+
   test("the fixed permutation table refuses k > 8 at plan build, naming the affine family") {
     val dir = graft.queries.Q.tempDir("graft_k9_index")
     def refusal(body: => Any): String = intercept[IllegalArgumentException](body).getMessage

@@ -103,6 +103,38 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ReusedExchange") || p.contains("TableCacheQueryStage"), p)
   }
 
+  test("q51 builds its MinHash sketches with no aggregate over shingle rows") {
+    // The per-document hash sets come out of the shingling pass, so no
+    // aggregate anywhere in the plan, the persisted sketch frame's
+    // included, reads the per-shingle `h` column: grouping shingle rows
+    // back into documents is what put every shingle of a partition
+    // through collect_set's sort-based fallback.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
+      val top = p match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      top.collect { case n => n }.flatMap {
+        case s: InMemoryTableScanExec => s +: nodes(s.relation.cachedPlan)
+        case s: QueryStageExec => s +: nodes(s.plan)
+        case n => Seq(n)
+      }
+    }
+    val df = q("q51_minhash_pairs")
+    df.collect()
+    val all = nodes(df.queryExecution.executedPlan)
+    val p = all.map(_.nodeName).mkString(", ")
+    assert(all.exists(_.isInstanceOf[InMemoryTableScanExec]), p) // the persisted sketch frame
+    val aggs = all.collect { case a: BaseAggregateExec => a }
+    assert(aggs.nonEmpty, p) // the candidate distinct
+    aggs.foreach(a => assert(!a.child.output.exists(_.name == "h"), a.treeString))
+    graft.GraftCache.releaseAll()
+  }
+
   test("simhash band self-join pins a shuffle join (Generate-stats trap)") {
     // Catalyst sizes a Generate node by its CHILD — the bands-times
     // fan-out is invisible — so the skinny banded frame can look

@@ -484,6 +484,21 @@ class PropertiesSpec extends SparkSpec {
         sigSets.select(col("doc_id"), col("hs")), threshold)
     }
 
+    /** The MinHash sketch as one aggregate over shingle rows: k grouped
+      * mins of family `perm` and the sorted `array<int>` set, as the
+      * pair core, the signatures and the index built it before the sets
+      * came from the shingling pass.
+      */
+    def groupedSigSets(sh: DataFrame, k: Int, perm: (Column, Int) => Column): DataFrame =
+      sh.groupBy(col("doc_id"))
+        .agg(min(perm(col("h"), 0)).as("mh0"),
+          (1 until k).map(i => min(perm(col("h"), i)).as(s"mh$i")) :+
+            sort_array(collect_set(col("h").cast("int"))).as("hs"): _*)
+
+    def jaccardVerify(sh: DataFrame, cand: DataFrame, threshold: Double): DataFrame =
+      verifyCandidatesWithSets(cand,
+        sh.groupBy(col("doc_id")).agg(sort_array(collect_set(col("h").cast("int"))).as("hs")), threshold)
+
     def sigSetsAffine(sh: DataFrame, k: Int): DataFrame =
       sh.groupBy(col("doc_id"))
         .agg(min(Dedup.permutedAffine(col("h"), 0)).as("mh0"),
@@ -774,6 +789,105 @@ class PropertiesSpec extends SparkSpec {
     }
     assert(spark.read.parquet(s"$dir/contract_new/_geometry").collect().toSeq ===
       spark.read.parquet(s"$dir/contract_old/_geometry").collect().toSeq)
+  }
+
+  /** sf0.001 documents plus crafted rows: ids on several rows whose
+    * sets must be united (a new id, an id of the base corpus, a split
+    * near-dup of doc 10, and an id whose rows have no shingle at all),
+    * texts of fewer than 3 tokens, empty, blank and null texts, and
+    * exact copies of docs 0-19. Row j goes to partition j mod `parts`,
+    * or to the even partitions only at 16, so the repeated ids'
+    * consecutive rows sit in different input partitions and half of
+    * the 16 are empty.
+    */
+  private def craftedDocs(parts: Int): org.apache.spark.sql.DataFrame = {
+    val base = spark.read.parquet(s"$sf001/documents.parquet").select("doc_id", "text")
+      .as[(Long, String)].collect().toSeq.sortBy(_._1)
+    val words = base.toMap.apply(10L).split(" ")
+    val crafted = Seq(
+      (900001L, "alpha beta gamma delta"), (900001L, "gamma delta epsilon zeta"),
+      (900001L, "alpha beta gamma delta"), (3L, "an extra row for an existing id"),
+      (4L, null), (4L, "two words"), (4L, ""),
+      (900002L, "only two"), (900003L, ""), (900004L, null), (900005L, "   "),
+      (900006L, "a b"), (900006L, null),
+      (900007L, words.take(words.length / 2 + 2).mkString(" ")),
+      (900007L, words.drop(words.length / 2).mkString(" ")))
+    val rows = crafted ++ base ++ base.take(20).map { case (id, t) => (900100L + id, t) }
+    val placed = rows.zipWithIndex.map { case (r, j) => (if (parts == 16) (j % 8) * 2 else j % parts, r) }
+    spark.sparkContext.parallelize(0 until parts, parts)
+      .flatMap(p => placed.collect { case (q, r) if q == p => r })
+      .toDF("doc_id", "text")
+  }
+
+  test("law: shingleSets ≡ the grouped shingle-row set, and signaturesOf ≡ the grouped min-aggregate (repeated ids, short/empty/null texts, 1/3/16 partitions, k = 8 permuted and k = 20 affine)") {
+    import org.apache.spark.sql.functions._
+    for (parts <- Seq(1, 3, 16)) {
+      val docs = craftedDocs(parts)
+      assert(docs.rdd.getNumPartitions === parts)
+      val sh = Dedup.shingleHashes(docs, "doc_id", "text")
+      val sets = Dedup.shingleSets(docs, "doc_id", "text")
+      val got = sets.as[(Long, Seq[Int])].collect().toSeq.sortBy(_._1)
+      val want = sh.groupBy(col("doc_id")).agg(sort_array(collect_set(col("h").cast("int"))).as("hs"))
+        .as[(Long, Seq[Int])].collect().toSeq.sortBy(_._1)
+      assert(got === want, s"parts=$parts")
+      val ids = got.map(_._1).toSet
+      assert(Seq(3L, 4L, 900001L, 900007L).forall(ids) && !(900002L to 900006L).exists(ids), s"parts=$parts")
+      // the repeated id holds the union of its rows' sets: 2 + 2 shingles
+      assert(got.find(_._1 == 900001L).get._2.size === 4)
+      for ((k, perm) <- Seq[(Int, Dedup.Permutation)]((8, Dedup.permuted), (20, Dedup.permutedAffine))) {
+        val signed = Dedup.signaturesOf(sets, k, perm)
+        assert(signed.columns.toSeq === ("doc_id" +: (0 until k).map(i => s"mh$i") :+ "hs"))
+        assert(signed.collect().toSet === OldDedup.groupedSigSets(sh, k, perm).collect().toSet,
+          s"k=$k parts=$parts")
+      }
+      assert(Dedup.minhashSignatures(docs, "doc_id", "text").collect().toSet ===
+        OldDedup.groupedSigSets(sh, 8, Dedup.permuted).drop("hs").collect().toSet, s"parts=$parts")
+    }
+  }
+
+  test("law: the set-built MinHash entry points ≡ their grouped-aggregate forms (minhashPairs, minhashPairsContract, jaccardVerify, index sets/, lshRecallAudit; 1/3/16 partitions)") {
+    import org.apache.spark.sql.functions._
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val dir = graft.queries.Q.tempDir("graft_sets_law")
+    for (parts <- Seq(1, 3, 16)) {
+      val docs = craftedDocs(parts)
+      val sh = Dedup.shingleHashes(docs, "doc_id", "text")
+      for (bands <- Seq(2, 8)) {
+        val got = rows(Dedup.minhashPairs(docs, "doc_id", "text", 8, bands, 0.5))
+        assert(got === rows(OldDedup.pairsFromHashes(sh, 8, bands, 0.5)), s"bands=$bands parts=$parts")
+        // doc 3 gained a row, so only its copy is no longer exact
+        assert((0L until 20L).forall(d => got.contains((d, 900100L + d, 1.0)) == (d != 3L)),
+          s"exact copies lost at bands=$bands")
+      }
+      val contract = rows(Dedup.minhashPairsContract(docs, "doc_id", "text"))
+      assert(contract === rows(OldDedup.pairsFromHashesAffine(sh, 3, 10, 0.6)), s"parts=$parts")
+      assert(contract.exists(p => p._1 == 10L && p._2 == 900007L), "the re-united split doc was not paired")
+      val cand = Dedup.minhashCandidates(OldDedup.groupedSigSets(sh, 8, Dedup.permuted), 8, 2)
+        .union(Seq((3L, 900001L), (4L, 900004L), (10L, 900007L)).toDF("doc_a", "doc_b"))
+      val verified = rows(Dedup.jaccardVerify(docs, cand, "doc_id", "text", 0.3))
+      assert(verified === rows(OldDedup.jaccardVerify(sh, cand, 0.3)), s"parts=$parts")
+      assert(verified.exists(p => p._1 == 10L && p._2 == 900007L))
+      Dedup.writeDedupIndex(docs, "doc_id", "text", s"$dir/$parts/fixed_new")
+      OldDedup.writeDedupIndex(docs, "doc_id", "text", s"$dir/$parts/fixed_old")
+      Dedup.writeDedupIndexContract(docs, "doc_id", "text", s"$dir/$parts/contract_new")
+      OldDedup.writeDedupIndexContract(docs, "doc_id", "text", s"$dir/$parts/contract_old")
+      for (kind <- Seq("fixed", "contract"); table <- Seq("bands", "sets")) {
+        val got = spark.read.parquet(s"$dir/$parts/${kind}_new/$table")
+        val want = spark.read.parquet(s"$dir/$parts/${kind}_old/$table")
+        assert(got.schema === want.schema, s"$kind/$table")
+        assert(got.count() > 0 && got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"$kind/$table parts=$parts")
+      }
+      val fixed = Dedup.lshRecallAudit(docs, "doc_id", "text", maxDf = 20).collect().toSeq
+      assert(fixed === OldDedup.lshRecallAudit(docs, "doc_id", "text", maxDf = 20).collect().toSeq)
+      assert(fixed.exists(_.getAs[Int]("j_bucket") == 10) && fixed.size >= 2, fixed)
+      val affine = Dedup.lshRecallAudit(docs, "doc_id", "text", maxDf = 20, k = 20, bands = 10,
+        perm = Dedup.permutedAffine).collect().toSeq
+      assert(affine === OldDedup.lshRecallAudit(docs, "doc_id", "text", maxDf = 20, k = 20, bands = 10,
+        affine = true).collect().toSeq)
+      GraftCache.releaseAll()
+    }
   }
 
   /** The cosine-family searches, audits and pair paths as they stood
