@@ -147,8 +147,8 @@ object Dedup {
     * memory-managed sort, then a streaming union of adjacent rows
     * ([[graft.plans.SortedSetUnion]], a sort-based aggregate over
     * document rows), holding one document at a time. The result stays
-    * hash-partitioned on `doc_id`, so the band join's candidate
-    * `distinct` above it needs no exchange of its own. A null text
+    * hash-partitioned on `doc_id`, so when the band join is broadcast
+    * the candidate `distinct` above it needs no exchange of its own. A null text
     * gives no shingles; a null id fails, naming `idCol`.
     */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String): DataFrame = {

@@ -580,9 +580,7 @@ object FeatureQueries {
     "q208_dedup_eval" -> ((s, dir) => {
       import graft.operators.Dedup
       val sample = t(s, dir, "documents").filter(col("doc_id") < 300)
-      val sets = Dedup.shingleHashes(sample, "doc_id", "text")
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_set(col("h"))).as("hs"))
+      val sets = Dedup.shingleSets(sample, "doc_id", "text")
       val truth = sets.as("a").crossJoin(broadcast(sets.as("b")))
         .filter(col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
